@@ -8,14 +8,15 @@ The production launch shape of the north rule:
         --input  <transcripts table/path> \\
         --output <results table/path> \\
         [--n-buckets 4096] [--buckets-per-commit 64] [--mode sparse] \\
-        [--salt-partitions 0] [--run-id <id>] [--atomic]
+        [--salt-partitions 0] [--run-id <id>]
 
 On a cluster the session comes from spark-submit's conf (executors, Iceberg
-catalog); locally it falls back to local[*]. Rerunning with the same
---output resumes from the last committed bucket (plans/lineage.py).
-``--atomic`` commits through the manifest-swap catalog (plans/manifest.py):
-immutable per-run data dirs + an atomically-renamed version pointer, so a
-kill at any point leaves readers on the previous consistent snapshot.
+catalog); locally it falls back to local[*]. The job is
+``plans.manifest.run_extraction_job_atomic``, the engine's one commit
+protocol: immutable per-run data dirs + an atomically-renamed version
+pointer, so a kill at any point leaves readers on the previous consistent
+snapshot (read them with ``plans.manifest.read_results``). Rerunning with
+the same --output resumes from the last committed bucket.
 """
 
 from __future__ import annotations
@@ -38,18 +39,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
              "before extraction (hot-conversation file skew)",
     )
     ap.add_argument("--run-id", default=None)
-    ap.add_argument(
-        "--atomic", action="store_true",
-        help="commit via the manifest-swap catalog (all-or-nothing "
-             "visibility per commit unit; readers use plans.manifest."
-             "read_results)",
-    )
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     from marie_icr_spark.operators.extraction import salt_repartition
-    from marie_icr_spark.plans.lineage import run_extraction_job
     from marie_icr_spark.plans.manifest import run_extraction_job_atomic
 
     owns_session = spark is None
@@ -57,16 +51,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         spark = SparkSession.builder.appName(
             "marie-icr-spark-extract"
         ).getOrCreate()
-    # save/restore confs we (and run_extraction_job) touch, so an injected
-    # session (tests, notebooks) is not permanently mutated. conf.get(k,
-    # default) resolves built-in defaults (never None for confs like
-    # adaptive.enabled), so "was it explicitly set" must come from the
-    # session SQLConf's settings map — only then is unset() the right
-    # restore.
-    _touched = (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.sources.partitionOverwriteMode",
-    )
+    # save/restore confs we touch, so an injected session (tests,
+    # notebooks) is not permanently mutated. conf.get(k, default) resolves
+    # built-in defaults (never None for confs like adaptive.enabled), so
+    # "was it explicitly set" must come from the session SQLConf's settings
+    # map — only then is unset() the right restore.
+    _touched = ("spark.sql.adaptive.enabled",)
 
     def _saved_value(k):
         try:
@@ -83,8 +73,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.salt_partitions > 0:
             transcripts = salt_repartition(transcripts, args.salt_partitions)
 
-        job = run_extraction_job_atomic if args.atomic else run_extraction_job
-        summary = job(
+        summary = run_extraction_job_atomic(
             spark,
             transcripts,
             args.output,

@@ -11,7 +11,7 @@ Layout:
   operators/   DataFrame-level operators (extraction, assembly, voting,
                dedup, similarity, text stats, multimodal plumbing)
   sources/     table loaders + deterministic transcript synthesizers
-  plans/       lineage / checkpoint-resume protocol
+  plans/       manifest-swap commit catalog (checkpoint/resume) + lineage log
   streaming/   Structured Streaming ingestion pipeline
 """
 

@@ -269,6 +269,11 @@ def fast_band_lines_py(boxes: list[list[int]]) -> tuple[list, list[int]] | None:
     dispatch overhead dominates the actual work, so plain loops are ~5×
     faster. Returns (line_boxes, line_no) or None for the numpy/general
     fallback.
+
+    Precondition: every box has exactly 4 elements (x, y, w, h). The
+    duplicate probe ``set(map(tuple, boxes))`` hashes whole rows, so a
+    longer row would change which boxes count as duplicates and thus the
+    fast-path routing. ``layout.parse_layout_payload`` guarantees it.
     """
     n = len(boxes)
     if n == 0:

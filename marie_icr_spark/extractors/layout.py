@@ -50,13 +50,22 @@ WORD_CONFIDENCE = 1.0
 _WORD_CONF_R3 = round(WORD_CONFIDENCE, 3)
 
 
+# Coordinate range of a layout box: x, y, x+w and y+h must all lie in
+# [-2^30, 2^30). Then every emitted word box and every line-bbox width
+# (max(x+w) - min(x) < 2^31) fits the int32 struct fields, and no value
+# reaches the int64 box math.
+_COORD_LO = -(1 << 30)
+_COORD_HI = 1 << 30
+
+
 def parse_layout_payload(text: str) -> tuple[list[str], list[list[int]]] | None:
     """Parse a layout JSON payload; None if it isn't one.
 
     Accepts either a bare list of word dicts or ``{"words": [...]}``; each
     word needs a string ``text`` and a 4-element numeric ``box`` (region
     validation contract, ``marie/ocr/ocr_engine.py:249-256`` — required keys,
-    ints coerced). Returns parallel (texts, boxes) lists.
+    ints coerced) whose x, y, x+w and y+h lie in [-2^30, 2^30). Returns
+    parallel (texts, boxes) lists.
     """
     s = text.strip()
     if not s or s[0] not in "[{":
@@ -76,20 +85,27 @@ def parse_layout_payload(text: str) -> tuple[list[str], list[list[int]]] | None:
         boxes = [item["box"] for item in data]
     except (TypeError, KeyError):
         return None
+    lo, hi = _COORD_LO, _COORD_HI
     for i, (txt, box) in enumerate(zip(texts, boxes)):
         if type(txt) is not str or type(box) is not list or len(box) != 4:
             return None
-        v0, v1, v2, v3 = box
+        x, y, w, h = box
         if not (
-            type(v0) is int and type(v1) is int
-            and type(v2) is int and type(v3) is int
+            type(x) is int and type(y) is int
+            and type(w) is int and type(h) is int
         ):
             try:
-                boxes[i] = [int(v) for v in box]
+                box = boxes[i] = [int(v) for v in box]
             except (TypeError, ValueError, OverflowError):
                 # OverflowError: int(float('inf')) via the stdlib-json
                 # fallback (orjson rejects Infinity at parse time)
                 return None
+            x, y, w, h = box
+        if not (
+            lo <= x < hi and lo <= y < hi
+            and lo <= x + w < hi and lo <= y + h < hi
+        ):
+            return None
     return texts, boxes
 
 

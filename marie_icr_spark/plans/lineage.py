@@ -1,31 +1,26 @@
-"""Checkpoint/resume protocol: per-partition lineage + idempotent commits.
+"""Lineage audit log: the ``_lineage`` schema and the helpers around it.
 
-Rebuilds the reference's resume machinery — restore prior outputs and skip
-completed work (``restore_assets``/skip logic, ``marie/pipe/components.py:450-499``,
-``marie/pipe/extract_pipeline.py:138-173``), content-addressed idempotence
-keys (``hash_frames_fast``, ``marie/utils/image_utils.py:136-149``) and the
-job state machine ``created → active → completed/failed``
-(``marie/scheduler/state.py:4-43``) — as a table-format protocol:
+Every commit of the manifest-swap catalog (:mod:`.manifest`) appends one
+lineage row per committed bucket, carrying (run_id, source snapshot
+fingerprint, partition content hash, turn/span counts, status, ts) — the
+FIXTURES.md §4 ``_lineage`` schema. It rebuilds the reference's resume
+bookkeeping — content-addressed idempotence keys (``hash_frames_fast``,
+``marie/utils/image_utils.py:136-149``) and the job state machine
+``created → active → completed/failed`` (``marie/scheduler/state.py:4-43``).
 
-* results are partitioned by ``bucket = pmod(xxhash64(conv_id), n_buckets)``
-  and written with **dynamic partition overwrite**, so re-processing a bucket
-  is byte-idempotent;
-* one lineage row per committed bucket carries (run_id, source snapshot
-  fingerprint, partition content hash, turn/span counts, status, ts) — the
-  FIXTURES.md §4 ``_lineage`` schema;
-* resume = anti-join of all buckets against completed lineage rows: only
-  missing buckets are reprocessed.
+The manifest is the visibility authority; these rows are the audit trail a
+reader checks committed partitions against (``read_lineage``). Rows are
+appended before the manifest swap, so a crash can leave an audit row for a
+unit that never became visible; the rerun re-commits that bucket with the
+same deterministic content.
 
-On Iceberg the data+lineage pair commits in one snapshot; on plain parquet
-(this sandbox) data lands before lineage, and a crash between the two simply
-re-runs that bucket to an identical state on resume.
+This module also holds what the writers share: bucketing (``with_bucket``),
+the order-insensitive source fingerprint, and the empty results frame.
 """
 
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +40,6 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 STATUS_COMPLETED = "completed"
-STATUS_FAILED = "failed"
 
 
 class SimulatedFailure(RuntimeError):
@@ -59,62 +53,13 @@ def _lineage_dir(output_dir: str) -> str:
 EMPTY_BUCKET_HASH = "0"
 
 
-def _delete_bucket_dirs(
-    spark: SparkSession, output_dir: str, buckets: list[int]
-) -> None:
-    """Remove the partition dirs of the given buckets (Hadoop FS — works on
-    local FS and HDFS alike; on Iceberg this is the snapshot's job). One
-    globStatus lists the existing dirs, then only the intersection is
-    deleted — O(existing) RPCs, not O(n_buckets) exists() probes (matters
-    at --n-buckets 4096 on object stores)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    glob = jvm.org.apache.hadoop.fs.Path(f"{output_dir}/bucket=*")
-    fs = glob.getFileSystem(conf)
-    # Only the missing-output-dir case is benign; any OTHER FS error must
-    # fail the run — silently skipping the purge would let stale-snapshot
-    # files survive in an empty-under-new-snapshot bucket, and the commit
-    # loop's read-back stats would then re-certify that stale data (the
-    # same raise-on-corruption policy as _read_results_safe).
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(output_dir)):
-        return
-    statuses = fs.globStatus(glob)
-    if statuses is None:
-        return
-    wanted = {f"bucket={b}" for b in buckets}
-    for st in statuses:
-        p = st.getPath()
-        if p.getName() in wanted:
-            fs.delete(p, True)
-
-
 def _empty_results_frame(spark: SparkSession) -> DataFrame:
     from ..operators.extraction import EXTRACTED_SCHEMA
-    from pyspark.sql import types as _T
 
-    schema = _T.StructType(
-        list(EXTRACTED_SCHEMA.fields)
-        + [_T.StructField("bucket", _T.IntegerType())]
+    schema = T.StructType(
+        list(EXTRACTED_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType())]
     )
     return spark.createDataFrame([], schema)
-
-
-def _read_results_safe(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read the results table; a run whose every pending bucket was empty
-    writes only _SUCCESS, so schema inference can fail — return an empty
-    frame with the result schema for exactly that case. Genuine I/O or
-    corruption errors still raise (swallowing them would let the commit
-    loop certify zero-count lineage over populated partitions)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(output_dir)
-    except AnalysisException as e:
-        msg = str(e)
-        if "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg \
-                or "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return _empty_results_frame(spark)
-        raise
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -144,182 +89,3 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
     except Exception:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return df.dropDuplicates(["run_id", "source_snapshot_id", "bucket"])
-
-
-def completed_buckets(
-    spark: SparkSession, output_dir: str, snapshot: str | None = None
-) -> set[int]:
-    """Buckets with a completed lineage row — restricted to the given source
-    snapshot when provided: a bucket committed under a DIFFERENT snapshot is
-    stale (the input changed between runs) and must be reprocessed."""
-    lin = read_lineage(spark, output_dir).filter(F.col("status") == STATUS_COMPLETED)
-    if snapshot is not None:
-        lin = lin.filter(F.col("source_snapshot_id") == snapshot)
-    rows = lin.select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
-
-
-def run_extraction_job(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    output_dir: str,
-    run_id: str | None = None,
-    n_buckets: int = 16,
-    buckets_per_commit: int = 4,
-    fail_after_commits: int | None = None,
-    mode: str = "sparse",
-) -> dict:
-    """Extract all pending buckets of ``transcripts`` into ``output_dir``.
-
-    Scale shape: the 100-TB source is scanned exactly ONCE per run — all
-    pending buckets are extracted and written in a single dynamic-overwrite
-    pass (each bucket partition is byte-idempotent). Lineage is then
-    committed in units of ``buckets_per_commit`` buckets, with stats
-    recomputed from the WRITTEN partitions (partition-pruned reads of the
-    output, never the source) — so the recorded partition_hash certifies
-    what actually landed on disk. A crash between lineage commits loses only
-    lineage rows; resume re-extracts just the unrecorded buckets.
-    ``fail_after_commits`` injects a crash between commit units for the
-    kill/rerun test. Returns a summary dict.
-    """
-    from ..operators.extraction import extract_turns
-
-    run_id = run_id or uuid.uuid4().hex
-
-    snapshot = source_fingerprint(transcripts)
-    bucketed = with_bucket(transcripts, n_buckets)
-
-    # buckets committed under a DIFFERENT source snapshot are stale → redo
-    done = completed_buckets(spark, output_dir, snapshot)
-    pending = [b for b in range(n_buckets) if b not in done]
-
-    commits = 0
-    processed: list[int] = []
-    if pending:
-        # Dynamic overwrite only rewrites partitions that receive NEW rows:
-        # a pending bucket that is empty under the current snapshot would
-        # keep its stale files from a previous snapshot — and the read-back
-        # stats below would then re-certify data that no longer exists in
-        # the source. Drop every pending bucket's partition dir first
-        # (idempotent: they are all about to be rewritten or are stale).
-        _delete_bucket_dirs(spark, output_dir, pending)
-        subset = (
-            bucketed
-            if len(pending) == n_buckets
-            else bucketed.filter(F.col("bucket").isin(pending))
-        )
-        # recompute bucket post-extraction instead of joining — exact & free
-        extracted = extract_turns(subset, mode=mode).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int"),
-        )
-        (
-            extracted.write.mode("overwrite")
-            # per-WRITE dynamic overwrite (rewrites only partitions that
-            # receive rows) — as a writer option, not a session conf, so
-            # other overwrite writes in the same shared session keep
-            # Spark's default static semantics
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(output_dir)
-        )
-
-    for i in range(0, len(pending), buckets_per_commit):
-        batch = pending[i : i + buckets_per_commit]
-        stats = _read_results_safe(spark, output_dir)
-        stats = (
-            stats.filter(F.col("bucket").isin(batch))  # partition-pruned
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("turn_count"),
-                F.sum("span_count").alias("span_count"),
-                F.format_string(
-                    "%x",
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.col("conv_id"), F.col("turn_idx"), F.col("extracted_text")
-                        )
-                    ),
-                ).alias("partition_hash"),
-            )
-            .collect()
-        )
-        by_bucket = {int(r["bucket"]): r for r in stats}
-        lineage_rows = []
-        for b in batch:
-            r = by_bucket.get(b)
-            if r is None:
-                # bucket empty under this snapshot: commit a zero-count row
-                # so resume treats it as done instead of pending forever
-                lineage_rows.append(
-                    (run_id, snapshot, b, EMPTY_BUCKET_HASH, 0, 0,
-                     STATUS_COMPLETED, None)
-                )
-            else:
-                lineage_rows.append(
-                    (
-                        run_id,
-                        snapshot,
-                        b,
-                        r["partition_hash"],
-                        int(r["turn_count"]),
-                        int(r["span_count"] or 0),
-                        STATUS_COMPLETED,
-                        None,
-                    )
-                )
-        (
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
-            .withColumn("committed_at", F.current_timestamp())
-            .write.mode("append")
-            .parquet(_lineage_dir(output_dir))
-        )
-        processed.extend(batch)
-        commits += 1
-        if fail_after_commits is not None and commits >= fail_after_commits:
-            raise SimulatedFailure(
-                f"injected failure after {commits} commits (run {run_id})"
-            )
-
-    return {
-        "run_id": run_id,
-        "source_snapshot_id": snapshot,
-        "buckets_processed": processed,
-        "buckets_skipped": sorted(done),
-        "commits": commits,
-        "started": time.time(),
-    }
-
-
-def read_results(
-    spark: SparkSession,
-    output_dir: str,
-    committed_only: bool = False,
-    snapshot: str | None = None,
-) -> DataFrame:
-    """Read the results table. ``committed_only=True`` gives readers the
-    Iceberg-snapshot-style consistency the plain-parquet layout lacks: only
-    buckets with a completed lineage row FOR THE TARGET SNAPSHOT are
-    visible — ``snapshot`` explicitly, else the snapshot of the newest
-    commit — so data written by a run that crashed before its lineage
-    commit stays hidden until the resumed run commits it. Remaining window
-    (documented): a run upgrading to a NEW snapshot that crashes before its
-    first commit leaves old-snapshot lineage pointing at purged buckets;
-    Iceberg's atomic snapshot swap closes that in production."""
-    df = _read_results_safe(spark, output_dir)
-    if not committed_only:
-        return df
-    lin = read_lineage(spark, output_dir).filter(
-        F.col("status") == STATUS_COMPLETED
-    )
-    if snapshot is None:
-        latest = lin.orderBy(F.col("committed_at").desc()).limit(1).collect()
-        if not latest:
-            return df.limit(0)
-        snapshot = latest[0]["source_snapshot_id"]
-    committed = (
-        lin.filter(F.col("source_snapshot_id") == snapshot)
-        .select("bucket")
-        .distinct()
-    )
-    return df.join(F.broadcast(committed), "bucket", "left_semi")

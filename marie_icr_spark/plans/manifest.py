@@ -1,11 +1,12 @@
 """Atomic data+lineage commits over plain files: manifest-swap catalog.
 
-Closes the documented parquet atomicity window of :mod:`.lineage`
-(``lineage.py`` ``read_results`` docstring): with dynamic partition
-overwrite, a run upgrading to a new source snapshot rewrites bucket dirs in
-place, so a crash can leave readers pointing at purged/partial partitions.
-This module rebuilds the transactional complete/fail contract of the
-reference's scheduler (``/root/reference/marie/scheduler/psql.py:811-868`` —
+The engine's only commit protocol. Plain parquet has no atomic multi-file
+commit: a writer that rewrites bucket dirs in place (dynamic partition
+overwrite) and records lineage afterwards leaves a window in which a crash
+— e.g. while upgrading to a new source snapshot — has readers see purged
+or partially written partitions. This catalog closes that window. It
+rebuilds the transactional complete/fail contract of the reference's
+scheduler (``marie/scheduler/psql.py:811-868`` —
 job completion flips atomically, never half-visible) the way Iceberg's
 hadoop catalog does it, with no extra jars:
 
@@ -234,9 +235,7 @@ def _read_written_run(spark: SparkSession, rdir: str, schema) -> DataFrame:
     A zero-row ``partitionBy`` write leaves only ``_SUCCESS`` in the dir —
     ``spark.read.parquet`` on that raises UNABLE_TO_INFER_SCHEMA. Passing
     the written frame's own schema makes the read-back a readable empty
-    frame instead, so an all-empty commit degrades to tombstone entries
-    (the same invariant ``lineage._read_results_safe`` guards on the
-    non-atomic path)."""
+    frame instead, so an all-empty commit degrades to tombstone entries."""
     return spark.read.schema(schema).option("basePath", rdir).parquet(rdir)
 
 
@@ -707,15 +706,17 @@ def run_extraction_job_atomic(
     fail_after_commits: int | None = None,
     mode: str = "sparse",
 ) -> dict:
-    """:func:`..lineage.run_extraction_job` with atomic visibility.
+    """Extract all pending buckets of ``transcripts`` into the catalog at
+    ``output_dir`` — the engine's one batch extraction job.
 
-    Identical scale shape — ONE source scan extracts all pending buckets,
-    lineage commits in ``buckets_per_commit`` units with stats recomputed
-    from the WRITTEN partitions — but data lands in an immutable per-run
-    dir and each unit becomes visible via a manifest swap, so a kill at any
-    point leaves readers on the previous fully-consistent version (the
-    kill/rerun test drives ``fail_after_commits`` through every position).
-    Lineage parquet rows are appended BEFORE the swap: the manifest is the
+    Scale shape: ONE source scan extracts all pending buckets into an
+    immutable per-run dir; commits then follow in ``buckets_per_commit``
+    units, with stats recomputed from the WRITTEN partitions, and each unit
+    becomes visible via a manifest swap — so a kill at any point leaves
+    readers on the previous fully-consistent version (the kill/rerun test
+    drives ``fail_after_commits`` through every position). Resume skips the
+    buckets CURRENT already commits under the same source snapshot. Lineage
+    parquet rows are appended BEFORE the swap: the manifest is the
     visibility authority, the lineage table the audit log.
     """
     from ..operators.extraction import extract_turns

@@ -1714,11 +1714,12 @@ EXT_ORACLES["grid_render"] = ORACLE_GRID_RENDER
 
 
 # ---------------------------------------------------------------------------
-# Resume-protocol invariant (S4/Q4-Q7, plans/lineage.py): run the checkpoint
-# job with an injected mid-run kill, resume it, then prove to the driver that
-# (a) every committed bucket's partition_hash recomputed from the WRITTEN
-# results equals the lineage row, and (b) the total turn/span counts equal
-# the source derivation — the part DuckDB can replay exactly.
+# Resume-protocol invariant (S4/Q4-Q7, plans/manifest.py + the _lineage
+# audit log of plans/lineage.py): run the checkpoint job with an injected
+# mid-run kill, resume it, then check that (a) every committed bucket's
+# partition_hash recomputed from the COMMITTED results equals its lineage
+# audit row, and (b) the total turn/span counts equal the source
+# derivation — the part DuckDB can replay exactly.
 # ---------------------------------------------------------------------------
 
 def q_lineage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1726,18 +1727,21 @@ def q_lineage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .plans import lineage as L
+    from .plans import manifest as M
 
     t = transcripts_from_docs(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="lineage_oracle_")
     try:
         try:
-            L.run_extraction_job(
+            M.run_extraction_job_atomic(
                 spark, t, out, n_buckets=8, buckets_per_commit=2,
                 fail_after_commits=1,
             )
         except L.SimulatedFailure:
             pass
-        L.run_extraction_job(spark, t, out, n_buckets=8, buckets_per_commit=2)
+        M.run_extraction_job_atomic(
+            spark, t, out, n_buckets=8, buckets_per_commit=2
+        )
 
         lin = (
             L.read_lineage(spark, out)
@@ -1746,7 +1750,7 @@ def q_lineage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["bucket"])
         )
         recomputed = (
-            L.read_results(spark, out)
+            M.read_results(spark, out)
             .groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("rc_turns"),

@@ -5,11 +5,13 @@ The reference's "streaming" is request streaming + job polling
 ``marie/scheduler/psql.py:242-289``) — here re-expressed as a real
 incremental pipeline:
 
-* ``stream_extract``: file-source ``readStream`` over the transcript table →
-  the same shuffle-free ``mapInPandas`` extraction as batch (the operator is
-  engine-agnostic) → per-microbatch commit through the lineage writer via
-  ``foreachBatch`` (checkpointed, idempotent buckets — the streaming twin of
-  plans/lineage.py);
+* ``stream_extract_atomic``: file-source ``readStream`` over the transcript
+  table → the same shuffle-free ``mapInArrow`` extraction as batch (the
+  operator is engine-agnostic) → ``foreachBatch`` commit of each
+  micro-batch through the manifest-swap catalog (plans/manifest.py). A
+  plain parquet sink makes a micro-batch's files visible one by one, so a
+  reader (or a crash mid-write) sees partial batches; the manifest swap
+  makes each micro-batch visible whole or not at all;
 * ``stream_kind_counts``: watermarked sliding-window aggregation of turns
   per payload kind (late-data semantics the reference lacks entirely).
 
@@ -17,8 +19,6 @@ Tests drive both with ``trigger(availableNow=True)``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,92 +40,6 @@ def read_transcript_stream(
     return reader.load()
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    n_buckets: int = 8,
-):
-    """readStream → extraction → bucketed idempotent sink (foreachBatch).
-
-    Each micro-batch writes result partitions and appends lineage rows with
-    the batch id as run id — replayed batches (restart after crash) overwrite
-    the same bucket partitions, so the sink is effectively exactly-once.
-    """
-    stream = read_transcript_stream(spark, input_dir)
-    extracted = extract_turns(stream)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..plans import lineage as L
-
-        sess = batch_df.sparkSession
-        bucketed = batch_df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int"),
-        )
-        # persist: the batch runs TWO actions (partition write + stats
-        # collect) and without it each re-runs the mapInArrow extraction —
-        # the dominant cost — halving sink throughput
-        bucketed.persist()
-        # per-write dynamic overwrite (writer option, not a session conf —
-        # a leaked session setting would silently change every later
-        # partitioned overwrite in the shared session to dynamic)
-        bucketed.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(
-            os.path.join(output_dir, f"batch={batch_id}")
-        )
-        stats = (
-            bucketed.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("turn_count"),
-                F.sum("span_count").alias("span_count"),
-                F.format_string(
-                    "%x",
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.col("conv_id"), F.col("turn_idx"),
-                            F.col("extracted_text"),
-                        )
-                    ),
-                ).alias("partition_hash"),
-            )
-            .collect()
-        )
-        rows = [
-            (
-                f"stream-batch-{batch_id}",
-                str(batch_id),
-                int(r["bucket"]),
-                r["partition_hash"],
-                int(r["turn_count"]),
-                int(r["span_count"] or 0),
-                L.STATUS_COMPLETED,
-                None,
-            )
-            for r in stats
-        ]
-        bucketed.unpersist()
-        if rows:
-            (
-                sess.createDataFrame(rows, L.LINEAGE_SCHEMA)
-                .withColumn("committed_at", F.current_timestamp())
-                .write.mode("append")
-                .parquet(os.path.join(output_dir, "_lineage"))
-            )
-
-    writer = (
-        extracted.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_extract_atomic(
     spark: SparkSession,
     input_dir: str,
@@ -141,8 +55,7 @@ def stream_extract_atomic(
     Each micro-batch becomes visible in one CURRENT-pointer swap
     (``plans.manifest.commit_stream_batch``): readers via
     ``plans.manifest.read_results`` see whole batches or nothing — the
-    streaming twin of ``run_extraction_job_atomic``, upgrading
-    :func:`stream_extract`'s file-at-a-time visibility. Replayed epochs
+    streaming twin of ``run_extraction_job_atomic``. Replayed epochs
     re-commit idempotently (fresh run dir, same epoch keys; orphans go to
     ``vacuum``).
     """
@@ -185,8 +98,8 @@ def stream_kind_counts(
     the final watermark) — in complete mode Spark keeps all window state
     and still aggregates late rows, so this exact form is NOT the unbounded
     10^12-turn shape. The production-shaped twins are
-    :func:`stream_sessionize` (update mode) and :func:`stream_extract`
-    (foreachBatch): put this aggregation behind ``outputMode("append")`` +
+    :func:`stream_sessionize` (update mode) and
+    :func:`stream_extract_atomic` (foreachBatch): put this aggregation behind ``outputMode("append")`` +
     a real sink and the declared watermark then does drop late rows and
     bound state to the open windows.
     """

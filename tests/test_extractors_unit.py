@@ -96,6 +96,65 @@ def test_parse_layout_rejects_non_layout():
     assert parse_layout_payload("not json [") is None
 
 
+def _layout(*boxes):
+    return json.dumps([{"text": f"w{i}", "box": b} for i, b in enumerate(boxes)])
+
+
+# Boxes whose coordinates leave [-2^30, 2^30): each used to extract as
+# layout and then break the int32 struct fields (or, at 2^63, the golden
+# twin's int64 box math).
+OVERSIZED_LAYOUTS = {
+    "coordinate_ge_2_31": _layout([2**31, 0, 5, 5]),
+    "x_plus_w_overflow": _layout([0, 0, 2**31, 5]),
+    "union_width_overflow": _layout([-(2**31) + 1, 0, 5, 5], [2**31 - 10, 0, 5, 5]),
+    "coordinate_2_63": _layout([2**63, 0, 5, 5]),
+}
+
+
+def test_layout_coordinate_range_edges():
+    lo, hi = -(2**30), 2**30
+    assert parse_layout_payload(_layout([lo, lo, 5, 5])) is not None
+    assert parse_layout_payload(_layout([hi - 6, hi - 6, 5, 5])) is not None
+    assert parse_layout_payload(_layout([hi - 5, 0, 5, 5])) is None
+    assert parse_layout_payload(_layout([0, hi - 5, 5, 5])) is None
+    assert parse_layout_payload(_layout([lo - 1, 0, 5, 5])) is None
+    assert parse_layout_payload(_layout([0, 0, 5.0, float(hi)])) is None
+
+
+def test_oversized_layout_boxes_are_not_layout_and_twins_agree():
+    from marie_icr_spark.extractors.core import extract_turn_arrow
+
+    for name, payload in OVERSIZED_LAYOUTS.items():
+        assert parse_layout_payload(payload) is None, name
+        gold = extract_turn(payload)
+        kind, text, spans, words, lines = extract_turn_arrow(payload)
+        assert gold.payload_kind != "layout", name
+        assert (kind, text, spans) == (
+            gold.payload_kind, gold.extracted_text, gold.span_count
+        ), name
+        assert words == [] and lines == [] and gold.words == [], name
+
+
+def test_oversized_layout_boxes_struct_extraction_completes(spark):
+    from marie_icr_spark.operators.extraction import extract_turns
+    from marie_icr_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    rows = [
+        ("c", i, "user", p, None, None)
+        for i, p in enumerate(OVERSIZED_LAYOUTS.values())
+    ]
+    df = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    got = {
+        r["turn_idx"]: r for r in extract_turns(df, with_structs=True).collect()
+    }
+    assert len(got) == len(OVERSIZED_LAYOUTS)
+    for i, payload in enumerate(OVERSIZED_LAYOUTS.values()):
+        gold = extract_turn(payload)
+        assert got[i]["payload_kind"] == gold.payload_kind
+        assert got[i]["extracted_text"] == gold.extracted_text
+        assert got[i]["words"] == [] and got[i]["lines"] == []
+
+
 # ---------- html ----------
 
 def test_html_boilerplate_stripped():

@@ -11,7 +11,8 @@ import pytest
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent / "jobs"))
 import run_extraction  # noqa: E402
 
-from marie_icr_spark.plans.lineage import read_lineage, read_results
+from marie_icr_spark.plans import manifest as M
+from marie_icr_spark.plans.lineage import read_lineage
 from marie_icr_spark.sources.transcripts import TRANSCRIPT_SCHEMA, synth_transcripts
 
 
@@ -26,6 +27,9 @@ def input_dir(spark, tmp_path_factory):
 
 
 def test_cli_end_to_end_and_resume_noop(spark, input_dir, tmp_path_factory, capsys):
+    """The job commits through the manifest-swap catalog: CURRENT advances
+    once per commit unit, the manifest reader returns every row, every
+    bucket has a completed lineage row, and a rerun is a no-op."""
     out = str(tmp_path_factory.mktemp("cli_out"))
     rc = run_extraction.main(
         ["--input", input_dir, "--output", out, "--n-buckets", "4",
@@ -35,12 +39,14 @@ def test_cli_end_to_end_and_resume_noop(spark, input_dir, tmp_path_factory, caps
     assert rc == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert sorted(summary["buckets_processed"]) == list(range(4))
+    assert summary["manifest_version"] == 2
+    assert M.current_version(out) == 2
     n_in = spark.read.parquet(input_dir).count()
-    assert read_results(spark, out, committed_only=True).count() == n_in
+    assert M.read_results(spark, out).count() == n_in
     lin = read_lineage(spark, out)
     assert lin.filter("status = 'completed'").select("bucket").distinct().count() == 4
 
-    # rerun = resume noop
+    # rerun = resume noop: nothing pending, no new manifest version
     rc2 = run_extraction.main(
         ["--input", input_dir, "--output", out, "--n-buckets", "4"],
         spark=spark,
@@ -48,6 +54,7 @@ def test_cli_end_to_end_and_resume_noop(spark, input_dir, tmp_path_factory, caps
     assert rc2 == 0
     summary2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary2["buckets_processed"] == []
+    assert M.current_version(out) == 2
 
 
 def test_cli_psm_mode_flag_reaches_extraction(spark, input_dir, tmp_path_factory, capsys):
@@ -63,8 +70,8 @@ def test_cli_psm_mode_flag_reaches_extraction(spark, input_dir, tmp_path_factory
         )
         assert rc == 0
     n_in = spark.read.parquet(input_dir).count()
-    a = read_results(spark, out_sparse)
-    b = read_results(spark, out_raw)
+    a = M.read_results(spark, out_sparse)
+    b = M.read_results(spark, out_raw)
     assert a.count() == n_in and b.count() == n_in
     # raw_line flattens layout turns to one input-order line → texts differ
     joined = (
@@ -78,36 +85,6 @@ def test_cli_psm_mode_flag_reaches_extraction(spark, input_dir, tmp_path_factory
     assert joined.count() > 0
 
 
-def test_cli_atomic_flag_commits_via_manifest(spark, input_dir, tmp_path_factory, capsys):
-    """--atomic routes the job through the manifest-swap catalog: CURRENT
-    advances, data lands in an immutable per-run dir, resume is a no-op,
-    and the manifest reader returns every row."""
-    from marie_icr_spark.plans import manifest as M
-
-    out = str(tmp_path_factory.mktemp("cli_atomic"))
-    rc = run_extraction.main(
-        ["--input", input_dir, "--output", out, "--n-buckets", "4",
-         "--buckets-per-commit", "2", "--atomic"],
-        spark=spark,
-    )
-    assert rc == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["manifest_version"] == 2
-    assert M.current_version(out) == 2
-    n_in = spark.read.parquet(input_dir).count()
-    assert M.read_results(spark, out).count() == n_in
-    # resume: nothing pending, no new manifest version
-    rc2 = run_extraction.main(
-        ["--input", input_dir, "--output", out, "--n-buckets", "4",
-         "--buckets-per-commit", "2", "--atomic"],
-        spark=spark,
-    )
-    assert rc2 == 0
-    summary2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary2["buckets_processed"] == []
-    assert M.current_version(out) == 2
-
-
 def test_corpus_pipeline_cli(spark, input_dir, tmp_path_factory, capsys):
     """Transcripts → curated corpus through the atomic catalog: every stage
     filter is reflected in the committed rows, the manifest certifies them,
@@ -116,7 +93,6 @@ def test_corpus_pipeline_cli(spark, input_dir, tmp_path_factory, capsys):
     from pyspark.sql import functions as F
 
     from marie_icr_spark.plans import corpus as C
-    from marie_icr_spark.plans import manifest as M
 
     out = str(tmp_path_factory.mktemp("corpus_out"))
     rc = run_corpus_pipeline.main(
@@ -168,8 +144,6 @@ def test_corpus_pipeline_cli_no_near_dup_rate_flags(
 ):
     import run_corpus_pipeline
 
-    from marie_icr_spark.plans import manifest as M
-
     out = str(tmp_path_factory.mktemp("corpus_nd"))
     rc = run_corpus_pipeline.main(
         ["--input", input_dir, "--output", out, "--no-near-dup",
@@ -192,7 +166,6 @@ def test_catalog_admin_cli(spark, input_dir, tmp_path_factory, capsys):
     from pyspark.sql import functions as F
 
     from marie_icr_spark.operators.extraction import extract_turns
-    from marie_icr_spark.plans import manifest as M
 
     out = str(tmp_path_factory.mktemp("admin"))
     batch = extract_turns(spark.read.parquet(input_dir))
@@ -253,7 +226,6 @@ def test_corpus_incremental_cli(spark, input_dir, tmp_path_factory, capsys):
 
     import run_corpus_incremental
     from marie_icr_spark.plans import corpus as C
-    from marie_icr_spark.plans import manifest as M
     from marie_icr_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
     stage = str(tmp_path_factory.mktemp("ci_stage"))

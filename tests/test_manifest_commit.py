@@ -154,7 +154,7 @@ def test_crash_before_first_commit_is_invisible(spark, sdf, tmp_path_factory):
 def test_snapshot_upgrade_crash_keeps_old_version_consistent(
     spark, sdf, tmp_path_factory
 ):
-    """The exact window the parquet emulation documented: input changes
+    """The window an in-place parquet writer leaves open: input changes
     (new snapshot), the upgrading run crashes mid-way — readers on CURRENT
     still see the OLD snapshot's complete state; nothing is purged."""
     out = str(tmp_path_factory.mktemp("atomic_upgrade"))
@@ -184,6 +184,101 @@ def test_snapshot_upgrade_crash_keeps_old_version_consistent(
         spark, sdf2, ref_dir, n_buckets=N_BUCKETS, buckets_per_commit=PER_COMMIT
     )
     assert _collect_sorted(spark, out).equals(_collect_sorted(spark, ref_dir))
+
+
+def test_single_extraction_pass_over_source(
+    spark, sdf, tmp_path_factory, monkeypatch
+):
+    """The 100-TB contract: one extraction plan / one source scan per run,
+    regardless of how many commit units follow."""
+    from marie_icr_spark.operators import extraction as X
+
+    calls = {"n": 0}
+    real = X.extract_turns
+
+    def counting(df, *a, **kw):
+        calls["n"] += 1
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(X, "extract_turns", counting)
+    out = str(tmp_path_factory.mktemp("atomic_onepass"))
+    summary = M.run_extraction_job_atomic(
+        spark, sdf, out, n_buckets=N_BUCKETS, buckets_per_commit=PER_COMMIT
+    )
+    assert summary["commits"] == N_BUCKETS // PER_COMMIT
+    assert calls["n"] == 1, "source must be extracted in a single pass"
+
+
+def test_bucket_emptied_by_new_snapshot_reads_empty(spark, tmp_path_factory):
+    """A bucket with rows under snapshot A and ZERO rows under snapshot B
+    reads back empty (no stale snapshot-A rows stay visible) and is
+    committed as a zero-count entry, so resume treats it as done."""
+    from pyspark.sql import functions as F
+
+    from marie_icr_spark.plans.lineage import read_lineage
+
+    tdf, _ = synth_transcripts(n_convs=20, seed=3, hot_factor=4)
+    full = spark.createDataFrame(tdf, schema=TRANSCRIPT_SCHEMA)
+    out = str(tmp_path_factory.mktemp("atomic_emptied"))
+    M.run_extraction_job_atomic(spark, full, out, n_buckets=4)
+    keep_bucket = 0
+    before = M.load_manifest(out)["buckets"]
+    assert any(
+        e["turn_count"] > 0 for k, e in before.items() if k != str(keep_bucket)
+    )
+    # new snapshot: keep only conversations landing in one bucket
+    reduced = (
+        M.with_bucket(full, 4).filter(F.col("bucket") == keep_bucket).drop("bucket")
+    )
+    assert 0 < reduced.count() < full.count()
+    summary = M.run_extraction_job_atomic(spark, reduced, out, n_buckets=4)
+    assert sorted(summary["buckets_processed"]) == list(range(4))
+
+    res = M.read_results(spark, out)
+    assert res.count() == reduced.count(), "stale rows from snapshot A survived"
+    assert {r["bucket"] for r in res.select("bucket").distinct().collect()} == {
+        keep_bucket
+    }
+    snap = summary["source_snapshot_id"]
+    entries = M.load_manifest(out)["buckets"]
+    for b in range(4):
+        if b == keep_bucket:
+            continue
+        assert entries[str(b)]["snapshot"] == snap
+        assert entries[str(b)]["turn_count"] == 0
+        assert entries[str(b)]["run_id"] is None
+    lin = (
+        read_lineage(spark, out)
+        .filter(F.col("source_snapshot_id") == snap)
+        .toPandas()
+    )
+    assert set(lin["bucket"]) == set(range(4))
+    assert (lin[lin["bucket"] != keep_bucket]["turn_count"] == 0).all()
+    _verify_manifest_vs_data(spark, out)
+
+
+def test_empty_source_completes_with_zero_rows(spark, tmp_path_factory):
+    """A zero-row source completes cleanly (no parquet schema-inference
+    crash), commits zero-count entries, and its rerun is a no-op."""
+    from marie_icr_spark.plans.lineage import read_lineage
+
+    empty = spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA)
+    out = str(tmp_path_factory.mktemp("atomic_empty_source"))
+    summary = M.run_extraction_job_atomic(spark, empty, out, n_buckets=4)
+    assert sorted(summary["buckets_processed"]) == list(range(4))
+    entries = M.load_manifest(out)["buckets"]
+    assert {int(k) for k in entries} == set(range(4))
+    assert all(e["turn_count"] == 0 for e in entries.values())
+    lin = read_lineage(spark, out).toPandas()
+    assert set(lin["bucket"]) == set(range(4))
+    assert (lin["turn_count"] == 0).all()
+    version = M.current_version(out)
+
+    summary2 = M.run_extraction_job_atomic(spark, empty, out, n_buckets=4)
+    assert summary2["buckets_processed"] == []
+    assert summary2["commits"] == 0
+    assert M.current_version(out) == version
+    assert M.read_results(spark, out).count() == 0
 
 
 def test_commit_conflict_detected(tmp_path):
@@ -1141,8 +1236,7 @@ def test_atomic_resume_with_all_pending_buckets_empty(
     spark, sdf, tmp_path_factory
 ):
     """Resume where every pending bucket is empty under the snapshot must
-    commit zero-count tombstones (the non-atomic twin's
-    _read_results_safe invariant), not crash on the read-back."""
+    commit zero-count tombstones, not crash on the read-back."""
     out = str(tmp_path_factory.mktemp("empty_pending"))
     with pytest.raises(SimulatedFailure):
         M.run_extraction_job_atomic(

@@ -2,6 +2,10 @@
 value-match its oracle_sql() twin on DuckDB (order-insensitive, columns
 sorted by name)."""
 
+import hashlib
+import json
+import pathlib
+
 import duckdb
 import pandas as pd
 import pytest
@@ -36,6 +40,24 @@ def _registry():
     qs, os_ = E.queries(), E.oracle_sql()
     assert set(os_) <= set(qs), "oracle without a query"
     return qs, os_
+
+
+def test_driver_contract_is_pinned():
+    """The names ``__spark_entry__.queries()`` exposes, their order and every
+    oracle SQL string match the checked-in pin (query name → sha256 of its
+    oracle SQL, in registry order): a refactor behind the entry contract
+    must leave the contract itself byte-identical."""
+    from marie_icr_spark import queries
+
+    pin = json.loads(
+        (pathlib.Path(__file__).parent / "driver_contract_pin.json").read_text()
+    )
+    assert list(queries.QUERIES) == list(pin)
+    got = {
+        k: hashlib.sha256(v.encode()).hexdigest()
+        for k, v in queries.ORACLES.items()
+    }
+    assert got == pin
 
 
 def test_all_queries_have_oracles():

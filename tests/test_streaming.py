@@ -4,8 +4,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from marie_icr_spark.plans import manifest as M
+from marie_icr_spark.plans.lineage import read_lineage
 from marie_icr_spark.sources.transcripts import TRANSCRIPT_SCHEMA, synth_transcripts
-from marie_icr_spark.streaming.pipeline import stream_extract, stream_kind_counts
+from marie_icr_spark.streaming.pipeline import (
+    stream_extract_atomic,
+    stream_kind_counts,
+)
 
 
 @pytest.fixture(scope="module")
@@ -23,16 +28,16 @@ def test_stream_extract_commits_all_turns(spark, stream_input, tmp_path_factory)
     path, tdf, gdf = stream_input
     out = str(tmp_path_factory.mktemp("stream_out"))
     ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-    q = stream_extract(spark, path, out, ckpt, available_now=True)
+    q = stream_extract_atomic(spark, path, out, ckpt, available_now=True)
     q.awaitTermination(120)
 
-    res = spark.read.parquet(out + "/batch=*").toPandas()
+    res = M.read_results(spark, out).toPandas()
     assert len(res) == len(gdf)
     merged = res.merge(gdf, on=["conv_id", "turn_idx"], suffixes=("_o", "_g"))
     assert len(merged) == len(gdf)
     assert (merged["extracted_text_o"] == merged["extracted_text_g"]).all()
 
-    lineage = spark.read.parquet(out + "/_lineage").toPandas()
+    lineage = read_lineage(spark, out).toPandas()
     assert lineage["turn_count"].sum() == len(gdf)
     assert (lineage["status"] == "completed").all()
 
