@@ -85,6 +85,35 @@ def test_cli_psm_mode_flag_reaches_extraction(spark, input_dir, tmp_path_factory
     assert joined.count() > 0
 
 
+def test_cli_atomic_flag_commits_via_manifest(spark, input_dir, tmp_path_factory, capsys):
+    """The job commits through the manifest-swap catalog (the only commit
+    protocol, so no flag selects it): CURRENT advances, every committed
+    bucket's data lives in an immutable per-run dir, the manifest reader
+    returns every row, and a resume with the same options is a no-op."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("cli_atomic"))
+    args = ["--input", input_dir, "--output", out, "--n-buckets", "4",
+            "--buckets-per-commit", "2"]
+    rc = run_extraction.main(args, spark=spark)
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["manifest_version"] == 2
+    assert M.current_version(out) == 2
+    run_ids = {e["run_id"] for e in M.load_manifest(out)["buckets"].values()}
+    assert None not in run_ids
+    for run_id in run_ids:
+        assert os.path.isdir(os.path.join(out, "data", run_id))
+    n_in = spark.read.parquet(input_dir).count()
+    assert M.read_results(spark, out).count() == n_in
+    # resume: nothing pending, no new manifest version
+    rc2 = run_extraction.main(args, spark=spark)
+    assert rc2 == 0
+    summary2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary2["buckets_processed"] == []
+    assert M.current_version(out) == 2
+
+
 def test_corpus_pipeline_cli(spark, input_dir, tmp_path_factory, capsys):
     """Transcripts → curated corpus through the atomic catalog: every stage
     filter is reflected in the committed rows, the manifest certifies them,
