@@ -11,9 +11,13 @@ extractor, mirroring the reference's engine-selection contract
   empty    blank/whitespace payloads → empty result, never an error
            (blank-page contract, marie/document/ocr_processor.py:146-154)
 
-This module is used both (a) inside the Spark pandas UDFs and (b) as the
-single-process reference extractor that produces golden outputs for the
-correctness gate (pattern of marie/ocr/mock_ocr_engine.py:35-53).
+There is one dispatcher, ``extract_turn_arrow``: the Spark operator
+(``operators.extraction``) calls it per turn inside ``mapInArrow`` and gets
+the layout structs as field-ordered tuples. ``extract_turn`` is its golden
+view — the same result with each struct tuple zipped with its field names
+into a dict — used as the single-process reference that produces golden
+outputs for the correctness gate (pattern of
+marie/ocr/mock_ocr_engine.py:35-53).
 """
 
 from __future__ import annotations
@@ -23,9 +27,9 @@ from typing import Any
 
 from .html import extract_html, looks_like_html
 from .layout import (
+    LINE_FIELDS,
+    WORD_FIELDS,
     extract_layout,
-    extract_layout_text,
-    extract_layout_tuples,
     parse_layout_payload,
 )
 from .markdown import extract_markdown, looks_like_markdown
@@ -67,61 +71,42 @@ def sniff_payload_kind(text: str) -> str:
     return _sniff(text)[0]
 
 
-def extract_turn(
-    text: str | None, mode: str = "sparse", with_structs: bool = True
-) -> TurnExtraction:
-    """Extract the main content of one turn payload. Never raises on
-    malformed input (fail-open contract, marie/pipe/extract_pipeline.py:143-154).
-    ``mode`` is the PSM contract for layout payloads (PSM_MODES);
-    ``with_structs=False`` takes the struct-free layout path (identical
-    text, no word/line structs built)."""
-    kind, parsed = _sniff(text or "")
-    if kind == "empty":
-        return TurnExtraction("", 0, "empty")
-    assert text is not None
-    if kind == "layout":
-        texts, boxes = parsed if parsed is not None else ([], [])
-        if not with_structs:
-            out = extract_layout_text(texts, boxes, mode=mode)
-            return TurnExtraction(out, span_count(out), "layout")
-        res = extract_layout(texts, boxes, mode=mode)
-        return TurnExtraction(
-            res["text"], span_count(res["text"]), "layout",
-            words=res["words"], lines=res["lines"],
-        )
-    if kind == "html":
-        res = extract_html(text)
-        return TurnExtraction(res["text"], span_count(res["text"]), "html")
-    if kind == "markdown":
-        res = extract_markdown(text)
-        return TurnExtraction(res["text"], span_count(res["text"]), "markdown")
-    out = normalize_plain(text)
-    return TurnExtraction(out, span_count(out), "plain")
-
-
 def extract_turn_arrow(
-    text: str | None, mode: str = "sparse"
+    text: str | None, mode: str = "sparse", with_structs: bool = True
 ) -> tuple[str, str, int, list[tuple], list[tuple]]:
-    """``extract_turn(..., with_structs=True)`` for the Spark Arrow boundary:
-    returns ``(payload_kind, extracted_text, span_count, word_tuples,
-    line_tuples)`` with the structs already as field-ordered tuples
-    (``extractors.layout.extract_layout_tuples``), skipping the dict build +
-    dict→tuple reconversion of the golden path. Value-identical to
-    ``extract_turn`` (certified by test + corpus diff); the golden dict form
-    stays the single-process reference."""
-    kind, parsed = _sniff(text or "")
+    """Extract the main content of one turn payload: returns
+    ``(payload_kind, extracted_text, span_count, word_tuples, line_tuples)``
+    with the layout structs as tuples in ``WORD_FIELDS``/``LINE_FIELDS``
+    order, the Arrow struct field order. Never raises on malformed input
+    (fail-open contract, marie/pipe/extract_pipeline.py:143-154).
+    ``mode`` is the PSM contract for layout payloads (PSM_MODES);
+    ``with_structs=False`` builds no word/line structs (identical text)."""
+    text = text or ""
+    kind, parsed = _sniff(text)
     if kind == "empty":
         return "empty", "", 0, [], []
-    assert text is not None
     if kind == "layout":
-        texts, boxes = parsed if parsed is not None else ([], [])
-        out, words, lines = extract_layout_tuples(texts, boxes, mode=mode)
+        out, words, lines = extract_layout(
+            *parsed, mode=mode, with_structs=with_structs
+        )
         return "layout", out, span_count(out), words, lines
     if kind == "html":
         out = extract_html(text)["text"]
-        return "html", out, span_count(out), [], []
-    if kind == "markdown":
+    elif kind == "markdown":
         out = extract_markdown(text)["text"]
-        return "markdown", out, span_count(out), [], []
-    out = normalize_plain(text)
-    return "plain", out, span_count(out), [], []
+    else:
+        out = normalize_plain(text)
+    return kind, out, span_count(out), [], []
+
+
+def extract_turn(
+    text: str | None, mode: str = "sparse", with_structs: bool = True
+) -> TurnExtraction:
+    """``extract_turn_arrow`` with the word/line structs as field-name
+    dicts — the golden view that tests and ``synth_transcripts`` read."""
+    kind, out, spans, words, lines = extract_turn_arrow(text, mode, with_structs)
+    return TurnExtraction(
+        out, spans, kind,
+        words=[dict(zip(WORD_FIELDS, w)) for w in words],
+        lines=[dict(zip(LINE_FIELDS, ln)) for ln in lines],
+    )

@@ -28,9 +28,10 @@ def render_grid_text(
 ) -> str:
     """Visual-layout text for one turn's layout result.
 
-    ``words``/``lines`` follow the FIXTURES.md §3 schemas (extract_layout
-    output). Output preserves horizontal alignment in character cells and
-    vertical gaps as blank lines.
+    ``words``/``lines`` are FIXTURES.md §3 structs as field-name dicts
+    (the ``WORD_FIELDS``/``LINE_FIELDS`` tuples of ``extract_layout``).
+    Output preserves horizontal alignment in character cells and vertical
+    gaps as blank lines.
     """
     if not lines:
         return ""

@@ -21,7 +21,6 @@ Blank payloads return the empty result rather than erroring
 from __future__ import annotations
 
 import json
-from typing import Any
 
 try:  # orjson is ~5x faster for payload parsing; fall back to stdlib
     import orjson as _fastjson
@@ -156,144 +155,35 @@ def _line_numbers(boxes_list: list[list[int]], mode: str) -> list[int]:
     return [int(v) for v in assign_lines(boxes, line_boxes)]
 
 
-def extract_layout_text(
-    texts_in: list[str], boxes_in: list[list[int]], mode: str = "sparse"
-) -> str:
-    """Reading-order text only — the hot path for struct-free extraction.
-
-    Byte-identical to ``extract_layout(...)["text"]``; skips every word/line
-    struct allocation (ids, envelopes, confidences), which is most of the
-    cost for the default ``with_structs=False`` query.
-    """
-    mode = _normalize_mode(mode)
-    # degenerate-box filter; zero-copy reuse when nothing is filtered (the
-    # overwhelmingly common case) — neither list is mutated downstream
-    if all(b[2] > 0 and b[3] > 0 for b in boxes_in):
-        texts, boxes = texts_in, boxes_in
-    else:
-        texts, boxes = [], []
-        for t, b in zip(texts_in, boxes_in):
-            if b[2] > 0 and b[3] > 0:
-                texts.append(t)
-                boxes.append(b)
-    if not texts:
-        return ""
-    if mode == "raw_line":
-        return join_words(texts)
-    line_no = _line_numbers(boxes, mode)
-    # stable x-sort; bound method key avoids a lambda frame per element
-    xs = [b[0] for b in boxes]
-    order = sorted(range(len(texts)), key=xs.__getitem__)
-    by_line: dict[int, list[str]] = {}
-    get = by_line.get
-    for i in order:
-        ln = line_no[i]
-        lst = get(ln)
-        if lst is None:
-            by_line[ln] = [texts[i]]
-        else:
-            lst.append(texts[i])
-    return join_lines([join_words(by_line[ln]) for ln in sorted(by_line)])
+# Struct field order of the word and line tuples ``extract_layout`` emits —
+# the field order of ``operators.extraction.WORD_TYPE``/``LINE_TYPE`` and
+# the keys of the golden dict view (``core.extract_turn``).
+WORD_FIELDS = ("id", "text", "confidence", "box", "line", "word_index")
+LINE_FIELDS = ("line", "wordids", "text", "bbox", "confidence")
 
 
 def extract_layout(
-    texts_in: list[str], boxes_in: list[list[int]], mode: str = "sparse"
-) -> dict[str, Any]:
+    texts_in: list[str],
+    boxes_in: list[list[int]],
+    mode: str = "sparse",
+    with_structs: bool = True,
+) -> tuple[str, list[tuple], list[tuple]]:
     """Assemble scrambled word boxes into reading-order lines and text.
 
-    Returns ``{"text", "words", "lines"}`` with the word/line schemas of
-    FIXTURES.md §3 (mirroring ocr_processor.py:180-190/:241-247).
+    Returns ``(text, word_tuples, line_tuples)``: one tuple per word in
+    ``WORD_FIELDS`` order and one per line in ``LINE_FIELDS`` order — the
+    FIXTURES.md §3 schemas (ocr_processor.py:180-190/:241-247) laid out as
+    the Arrow struct fields, so the Spark boundary converts them directly.
+
+    ``with_structs=False`` returns ``(text, [], [])`` and skips every
+    word/line struct allocation (ids, envelopes, confidences), which is
+    most of the cost for the struct-free extraction queries; the text is
+    the same.
     """
     mode = _normalize_mode(mode)
     # Degenerate-box filter (ocr_engine.py:277-287): zero/negative extents.
-    usable = [
-        (t, b) for t, b in zip(texts_in, boxes_in) if b[2] > 0 and b[3] > 0
-    ]
-    if not usable:
-        return {"text": "", "words": [], "lines": []}
-
-    boxes = np.asarray([b for _, b in usable], dtype=np.int64)
-    texts = [t for t, _ in usable]
-
-    if mode == "raw_line":
-        # no box analysis: input order, one line (box_processor.py:145-146)
-        text = join_words(texts)
-        return {
-            "text": text,
-            "words": [
-                {
-                    "id": i, "text": t,
-                    "confidence": _WORD_CONF_R3,
-                    "box": boxes[i].tolist(),
-                    "line": 1, "word_index": i,
-                }
-                for i, t in enumerate(texts)
-            ],
-            "lines": [
-                {
-                    "line": 1, "wordids": list(range(len(texts))),
-                    "text": text, "bbox": envelope(boxes.tolist()),
-                    "confidence": round(WORD_CONFIDENCE, 4),
-                }
-            ],
-        }
-
-    line_list = _line_numbers([b for _, b in usable], mode)
-
-    # LTR reindex by x (ocr_processor.py:160-190): id = rank in x order;
-    # group per line in one pass (x order within the line is preserved).
-    order = np.argsort(boxes[:, 0], kind="stable")
-    boxes_list = boxes.tolist()
-    by_line: dict[int, list[dict[str, Any]]] = {}
-    for rank, idx in enumerate(order.tolist()):
-        w = {
-            "id": rank,
-            "text": texts[idx],
-            "confidence": _WORD_CONF_R3,
-            "box": boxes_list[idx],
-            "line": line_list[idx],
-        }
-        by_line.setdefault(w["line"], []).append(w)
-
-    # Per-line regroup in ascending line order (ocr_processor.py:210-247).
-    out_words: list[dict[str, Any]] = []
-    out_lines: list[dict[str, Any]] = []
-    word_index = 0
-    for i, ln in enumerate(sorted(by_line)):
-        picks = by_line[ln]
-        for w in picks:
-            w["word_index"] = word_index
-            word_index += 1
-            out_words.append(w)
-        out_lines.append(
-            {
-                "line": i + 1,
-                "wordids": [w["id"] for w in picks],
-                "text": join_words([w["text"] for w in picks]),
-                "bbox": envelope([w["box"] for w in picks]),
-                "confidence": round(
-                    sum(w["confidence"] for w in picks) / len(picks), 4
-                ),
-            }
-        )
-
-    text = join_lines([ln["text"] for ln in sorted(out_lines, key=lambda k: k["line"])])
-    return {"text": text, "words": out_words, "lines": out_lines}
-
-
-def extract_layout_tuples(
-    texts_in: list[str], boxes_in: list[list[int]], mode: str = "sparse"
-) -> tuple[str, list[tuple], list[tuple]]:
-    """``extract_layout`` emitting field-ordered tuples for the Arrow
-    boundary instead of dicts — (text, word_tuples, line_tuples) with
-    word = (id, text, confidence, box, line, word_index) and
-    line = (line, wordids, text, bbox, confidence), exactly the schemas of
-    ``operators.extraction``. Value-identical to running ``extract_layout``
-    and converting each dict (certified by test + corpus diff); skipping
-    the dict build + reconversion roughly halves the struct-path cost.
-    The pure-Python golden contract keeps using the dict form.
-    """
-    mode = _normalize_mode(mode)
+    # Zero-copy reuse when nothing is filtered (the overwhelmingly common
+    # case) — neither list is mutated downstream.
     if all(b[2] > 0 and b[3] > 0 for b in boxes_in):
         texts, boxes_list = texts_in, boxes_in
     else:
@@ -307,7 +197,10 @@ def extract_layout_tuples(
     n = len(texts)
 
     if mode == "raw_line":
+        # no box analysis: input order, one line (box_processor.py:145-146)
         text = join_words(texts)
+        if not with_structs:
+            return text, [], []
         return (
             text,
             [
@@ -327,10 +220,30 @@ def extract_layout_tuples(
 
     line_list = _line_numbers(boxes_list, mode)
 
-    # LTR reindex by x: id = rank in x order; group per line in one pass
-    # (x order within the line is preserved), exactly as extract_layout.
+    # LTR reindex by x (ocr_processor.py:160-190): id = rank in the stable
+    # x order; bound method key avoids a lambda frame per element.
     xs = [b[0] for b in boxes_list]
     order = sorted(range(n), key=xs.__getitem__)
+
+    if not with_structs:
+        # text only: group word texts per line, x order preserved
+        by_text: dict[int, list[str]] = {}
+        get = by_text.get
+        for idx in order:
+            ln = line_list[idx]
+            lst = get(ln)
+            if lst is None:
+                by_text[ln] = [texts[idx]]
+            else:
+                lst.append(texts[idx])
+        return (
+            join_lines([join_words(by_text[ln]) for ln in sorted(by_text)]),
+            [],
+            [],
+        )
+
+    # group (rank, index) per line in one pass (x order within the line is
+    # preserved)
     by_line: dict[int, list[tuple[int, int]]] = {}
     get = by_line.get
     for rank, idx in enumerate(order):
@@ -342,6 +255,9 @@ def extract_layout_tuples(
         else:
             lst.append(e)
 
+    # Per-line regroup in ascending line order (ocr_processor.py:210-247):
+    # sequential word_index, " " text join, envelope bbox, avg confidence
+    # round 4; turn text = line texts joined "\n" (meta_to_text).
     out_words: list[tuple] = []
     out_lines: list[tuple] = []
     line_texts: list[str] = []

@@ -5,8 +5,10 @@ Spark-first design notes (the reference loops pages in-process,
 row, so the hot path is a **narrow** Arrow-batched map — zero shuffle, scales
 linearly with executors at 10^12 turns):
 
-* payload parsing/extraction runs Arrow-batched via the pure-Python twin
-  (``extractors.core.extract_turn``) — no row-at-a-time Python UDFs;
+* payload parsing/extraction runs Arrow-batched through the one per-turn
+  dispatcher, ``extractors.core.extract_turn_arrow`` — no row-at-a-time
+  Python UDFs. Its golden view ``extract_turn`` (the same result with the
+  structs as field-name dicts) is the single-process oracle twin;
 * the Arrow boundary uses ``mapInArrow``: passthrough columns (conv_id,
   ts, …) are forwarded as the SAME Arrow arrays that arrived (zero
   conversion), and the word/line struct columns are built directly with
@@ -29,8 +31,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ..extractors.core import extract_turn, extract_turn_arrow
+from ..extractors.core import extract_turn_arrow
 
 WORD_TYPE = T.ArrayType(
     T.StructType(
@@ -73,51 +76,12 @@ EXTRACTED_FULL_SCHEMA = T.StructType(
     + [T.StructField("words", WORD_TYPE), T.StructField("lines", LINE_TYPE)]
 )
 
-# Arrow twins of WORD_TYPE/LINE_TYPE (field order IS the tuple order below)
-_WORD_PA = pa.list_(
-    pa.struct(
-        [
-            ("id", pa.int32()),
-            ("text", pa.string()),
-            ("confidence", pa.float64()),
-            ("box", pa.list_(pa.int32())),
-            ("line", pa.int32()),
-            ("word_index", pa.int32()),
-        ]
-    )
-)
-_LINE_PA = pa.list_(
-    pa.struct(
-        [
-            ("line", pa.int32()),
-            ("wordids", pa.list_(pa.int32())),
-            ("text", pa.string()),
-            ("bbox", pa.list_(pa.int32())),
-            ("confidence", pa.float64()),
-        ]
-    )
-)
+# The same struct types as Arrow types: ``pa.array`` builds the columns
+# straight from the field-ordered tuples of ``extract_turn_arrow``.
+_WORD_PA = to_arrow_type(WORD_TYPE)
+_LINE_PA = to_arrow_type(LINE_TYPE)
 
 _PASSTHROUGH = ("conv_id", "turn_idx", "role", "tool", "ts")
-
-
-def _word_tuples(words: list[dict]) -> list[tuple]:
-    """Dict structs → field-ordered tuples for the Arrow boundary: pyarrow
-    converts tuple rows into struct arrays ~5× faster than dict rows (no
-    per-field key lookup), with identical resulting columns. The pure-Python
-    golden contract (extractors.layout) keeps emitting dicts."""
-    return [
-        (w["id"], w["text"], w["confidence"], w["box"], w["line"],
-         w["word_index"])
-        for w in words
-    ]
-
-
-def _line_tuples(lines: list[dict]) -> list[tuple]:
-    return [
-        (ln["line"], ln["wordids"], ln["text"], ln["bbox"], ln["confidence"])
-        for ln in lines
-    ]
 
 
 def _extract_batches(
@@ -133,24 +97,16 @@ def _extract_batches(
         texts = rb.column(names.index("text")).to_pylist()
         kinds, outs, spans = [], [], []
         words, lines = [], []
-        if with_structs:
-            # tuple-direct twin: structs arrive already in Arrow field
-            # order, skipping the dict build + dict→tuple reconversion
-            for t in texts:
-                kind, out, span, wts, lts = extract_turn_arrow(t, mode=mode)
-                kinds.append(kind)
-                if need_text:
-                    outs.append(out)
-                spans.append(span)
-                words.append(wts)
-                lines.append(lts)
-        else:
-            for t in texts:
-                r = extract_turn(t, mode=mode, with_structs=False)
-                kinds.append(r.payload_kind)
-                if need_text:
-                    outs.append(r.extracted_text)
-                spans.append(r.span_count)
+        for t in texts:
+            kind, out, span, wts, lts = extract_turn_arrow(
+                t, mode=mode, with_structs=with_structs
+            )
+            kinds.append(kind)
+            if need_text:
+                outs.append(out)
+            spans.append(span)
+            words.append(wts)
+            lines.append(lts)
         # passthrough columns are forwarded as the arrays they arrived in —
         # no pandas roundtrip, no copy
         arrays = [

@@ -56,6 +56,23 @@ def test_layout_struct_schema(spark, synth):
             assert ln["text"] == " ".join(by_id[i] for i in ln["wordids"])
 
 
+def test_struct_field_order_matches_extractor_tuples():
+    """The Spark struct schemas (and the Arrow types derived from them)
+    list their fields in the order of the extractor's word/line tuples."""
+    from marie_icr_spark.extractors.layout import LINE_FIELDS, WORD_FIELDS
+    from marie_icr_spark.operators.extraction import (
+        _LINE_PA,
+        _WORD_PA,
+        LINE_TYPE,
+        WORD_TYPE,
+    )
+
+    assert [f.name for f in WORD_TYPE.elementType.fields] == list(WORD_FIELDS)
+    assert [f.name for f in LINE_TYPE.elementType.fields] == list(LINE_FIELDS)
+    assert [f.name for f in _WORD_PA.value_type] == list(WORD_FIELDS)
+    assert [f.name for f in _LINE_PA.value_type] == list(LINE_FIELDS)
+
+
 def test_assembly_matches_pandas_golden(spark, synth):
     sdf, tdf, gdf = synth
     out = assemble_conversations(extract_turns(sdf), bucket_width=7).toPandas()

@@ -4,7 +4,7 @@ import json
 
 from marie_icr_spark.extractors.core import extract_turn, sniff_payload_kind
 from marie_icr_spark.extractors.html import extract_html
-from marie_icr_spark.extractors.layout import extract_layout, parse_layout_payload
+from marie_icr_spark.extractors.layout import parse_layout_payload
 from marie_icr_spark.extractors.markdown import extract_markdown
 from marie_icr_spark.extractors.textnorm import normalize_plain, span_count
 

@@ -8,7 +8,7 @@ join rules, and layout invariants under arbitrary boxes.
 import json
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from marie_icr_spark.extractors.boxmath import assign_lines, cluster_lines
@@ -59,9 +59,18 @@ boxes_strategy = st.lists(
     max_size=40,
 )
 
+# 600 boxes in 75 clean 8-word rows (every 50th degenerate): past the
+# 512-word cut-over, so sparse mode takes the numpy band path
+# (boxmath.fast_band_lines), which the 40-box strategy never reaches.
+BIG_BAND_PAGE = [
+    ((i % 8) * 70, (i // 8) * 22 + (i % 2), 60, -1 if i % 50 == 7 else 16)
+    for i in range(600)
+]
+
 
 @settings(max_examples=150, deadline=None)
 @given(boxes_strategy)
+@example(BIG_BAND_PAGE)
 def test_layout_invariants_arbitrary_boxes(boxes):
     payload = json.dumps(
         [{"text": f"w{i}", "box": list(b)} for i, b in enumerate(boxes)]
@@ -99,6 +108,7 @@ def test_cluster_assign_total_and_deterministic(boxes):
 
 @settings(max_examples=150, deadline=None)
 @given(boxes_strategy)
+@example(BIG_BAND_PAGE)
 def test_lean_text_path_equals_struct_path_all_modes(boxes):
     """extract_turn(with_structs=False) must be byte-identical in text and
     span_count to the struct path, for every PSM mode, on arbitrary boxes."""
