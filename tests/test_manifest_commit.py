@@ -1305,3 +1305,73 @@ def test_current_version_rolls_forward_over_regressed_pointer(
     # the next writer repairs the pointer file itself
     M._publish_pending(out)
     assert M._pointer_version(out) == 2
+
+
+def _assert_lineage_mirrors(spark, out, committed_by):
+    """Every manifest entry has exactly one lineage row with equal bucket,
+    snapshot, hash and counts; ``committed_by(key, entry)`` names the run
+    whose row it must be."""
+    from marie_icr_spark.plans.lineage import read_lineage
+
+    rows = [r.asDict() for r in read_lineage(spark, out).collect()]
+    m = M.load_manifest(out)
+    assert len(rows) == len(m["buckets"])
+    for k, e in m["buckets"].items():
+        b = int(k.split("/")[-1])
+        mine = [
+            r for r in rows
+            if r["bucket"] == b and r["source_snapshot_id"] == e["snapshot"]
+        ]
+        assert len(mine) == 1, k
+        r = mine[0]
+        assert r["partition_hash"] == e["partition_hash"], k
+        assert r["turn_count"] == e["turn_count"], k
+        assert r["span_count"] == e["span_count"], k
+        assert r["status"] == "completed", k
+        assert r["run_id"] == committed_by(k, e), k
+
+
+def test_lineage_rows_mirror_manifest_entries(spark, sdf, tmp_path_factory):
+    """The lineage audit trail is the manifest's mirror: a killed-then-
+    resumed batch job over a source that leaves buckets empty, and a
+    two-epoch stream, each append one row per committed entry. The job's
+    tombstones carry hash "0" and the committing job's run_id."""
+    from pyspark.sql import functions as F
+
+    dropped = [1, 5]
+    subset = M.with_bucket(sdf, N_BUCKETS).filter(
+        ~F.col("bucket").isin(dropped)
+    ).drop("bucket")
+    out = str(tmp_path_factory.mktemp("lineage_mirror"))
+    with pytest.raises(SimulatedFailure):
+        M.run_extraction_job_atomic(
+            spark, subset, out, n_buckets=N_BUCKETS,
+            buckets_per_commit=PER_COMMIT, fail_after_commits=1,
+            run_id="killed-run",
+        )
+    first_unit = set(M.load_manifest(out)["buckets"])
+    assert len(first_unit) == PER_COMMIT
+    M.run_extraction_job_atomic(
+        spark, subset, out, n_buckets=N_BUCKETS,
+        buckets_per_commit=PER_COMMIT, run_id="resumed-run",
+    )
+
+    def job_run(k, e):
+        want = "killed-run" if k in first_unit else "resumed-run"
+        if e["run_id"] is not None:
+            assert e["run_id"] == want
+        return want
+
+    m = M.load_manifest(out)
+    empties = {int(k) for k, e in m["buckets"].items() if e["turn_count"] == 0}
+    assert set(dropped) <= empties
+    for b in empties:
+        e = m["buckets"][str(b)]
+        assert e["run_id"] is None and e["partition_hash"] == "0"
+    _assert_lineage_mirrors(spark, out, job_run)
+
+    stream_out = str(tmp_path_factory.mktemp("lineage_mirror_stream"))
+    _two_epoch_table(spark, sdf, stream_out)
+    sm = M.load_manifest(stream_out)
+    assert {k.split("/")[0] for k in sm["buckets"]} == {"0", "1"}
+    _assert_lineage_mirrors(spark, stream_out, lambda k, e: e["run_id"])
