@@ -1,12 +1,13 @@
 """Lineage audit log: the ``_lineage`` schema and the helpers around it.
 
 Every commit of the manifest-swap catalog (:mod:`.manifest`) appends one
-lineage row per committed bucket, carrying (run_id, source snapshot
-fingerprint, partition content hash, turn/span counts, status, ts) — the
-FIXTURES.md §4 ``_lineage`` schema. It rebuilds the reference's resume
-bookkeeping — content-addressed idempotence keys (``hash_frames_fast``,
-``marie/utils/image_utils.py:136-149``) and the job state machine
-``created → active → completed/failed`` (``marie/scheduler/state.py:4-43``).
+lineage row per committed manifest entry (:func:`append_lineage`), carrying
+(run_id, source snapshot fingerprint, partition content hash, turn/span
+counts, status, ts) — the FIXTURES.md §4 ``_lineage`` schema. It rebuilds
+the reference's resume bookkeeping — content-addressed idempotence keys
+(``hash_frames_fast``, ``marie/utils/image_utils.py:136-149``) and the job
+state machine ``created → active → completed/failed``
+(``marie/scheduler/state.py:4-43``).
 
 The manifest is the visibility authority; these rows are the audit trail a
 reader checks committed partitions against (``read_lineage``). Rows are
@@ -14,8 +15,9 @@ appended before the manifest swap, so a crash can leave an audit row for a
 unit that never became visible; the rerun re-commits that bucket with the
 same deterministic content.
 
-This module also holds what the writers share: bucketing (``with_bucket``),
-the order-insensitive source fingerprint, and the empty results frame.
+This module also holds what the writers share: the one bucket layout
+(``with_bucket``), the order-insensitive source fingerprint, and the empty
+results frame.
 """
 
 from __future__ import annotations
@@ -62,9 +64,10 @@ def _empty_results_frame(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int, key_col: str = "conv_id") -> DataFrame:
+    """The catalog's one bucket layout: ``pmod(xxhash64(key), n_buckets)``."""
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
     )
 
 
@@ -89,3 +92,31 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
     except Exception:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return df.dropDuplicates(["run_id", "source_snapshot_id", "bucket"])
+
+
+def append_lineage(
+    spark: SparkSession, output_dir: str, run_id: str, entries: dict
+) -> None:
+    """Append one ``completed`` audit row per manifest entry of a commit
+    unit (``{key: entry}``, keys ``"<bucket>"`` or ``"<epoch>/<bucket>"``).
+    Every row carries the committing writer's ``run_id`` — also for a
+    tombstone entry, whose manifest ``run_id`` is None."""
+    rows = [
+        (
+            run_id,
+            e["snapshot"],
+            int(k.split("/")[-1]),
+            e["partition_hash"],
+            e["turn_count"],
+            e["span_count"],
+            STATUS_COMPLETED,
+            None,
+        )
+        for k, e in entries.items()
+    ]
+    (
+        spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        .withColumn("committed_at", F.current_timestamp())
+        .write.mode("append")
+        .parquet(_lineage_dir(output_dir))
+    )

@@ -31,6 +31,15 @@ before renaming CURRENT is rolled forward by the next writer
 Resume = buckets absent from CURRENT (or committed under a different source
 snapshot) are re-extracted into a new run dir; a crashed run's orphan dir is
 simply never referenced and is reclaimed by :func:`vacuum`.
+
+Every writer — the batch job, the streaming sink, :func:`commit_table` and
+:func:`compact` — goes through the same write path: rows bucketed by
+:func:`~.lineage.with_bucket`, one :func:`_write_run` (write the run dir,
+read it back, certify per-bucket stats in one aggregate), one
+:func:`_entry` per manifest key, the lineage audit rows
+(:func:`~.lineage.append_lineage`) before the swap, then the CAS. One
+check, :func:`verify`, recomputes the stats from what readers see and
+compares them with the entries.
 """
 
 from __future__ import annotations
@@ -43,11 +52,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import (
-    LINEAGE_SCHEMA,
-    STATUS_COMPLETED,
+    EMPTY_BUCKET_HASH,
     SimulatedFailure,
     _empty_results_frame,
-    _lineage_dir,
+    append_lineage,
     source_fingerprint,
     with_bucket,
 )
@@ -229,16 +237,6 @@ def _run_dir(output_dir: str, run_id: str) -> str:
     return os.path.join(output_dir, "data", run_id)
 
 
-def _read_written_run(spark: SparkSession, rdir: str, schema) -> DataFrame:
-    """Read back a run dir this writer just wrote, for stats certification.
-
-    A zero-row ``partitionBy`` write leaves only ``_SUCCESS`` in the dir —
-    ``spark.read.parquet`` on that raises UNABLE_TO_INFER_SCHEMA. Passing
-    the written frame's own schema makes the read-back a readable empty
-    frame instead, so an all-empty commit degrades to tombstone entries."""
-    return spark.read.schema(schema).option("basePath", rdir).parquet(rdir)
-
-
 def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
     """Empty frame in the TABLE's schema: generic tables record their
     schema in the manifest (:func:`commit_table`), extraction tables fall
@@ -270,14 +268,23 @@ def read_results(
     for b, ent in m["buckets"].items():
         if ent["run_id"] is not None and ent["turn_count"] > 0:
             by_run.setdefault(ent["run_id"], []).append(int(b.split("/")[-1]))
+    return _read_runs(spark, output_dir, m, by_run)
+
+
+def _read_runs(
+    spark: SparkSession, output_dir: str, manifest: dict, by_run: dict
+) -> DataFrame:
+    """Union of the ``{run_id: [bucket, ...]}`` partitions, each read
+    partition-pruned with ``basePath`` so the ``bucket`` column survives;
+    the table's empty frame when there are none."""
     frames = [
         spark.read.option("basePath", _run_dir(output_dir, rid)).parquet(
-            *[os.path.join(_run_dir(output_dir, rid), f"bucket={b}") for b in bs]
+            *[os.path.join(_run_dir(output_dir, rid), f"bucket={b}") for b in sorted(set(bs))]
         )
         for rid, bs in sorted(by_run.items())
     ]
     if not frames:
-        return _empty_frame(spark, m)
+        return _empty_frame(spark, manifest)
     out = frames[0]
     for f in frames[1:]:
         # schema evolution across runs: a run written before a column was
@@ -326,13 +333,9 @@ def read_incremental(
     old = load_manifest(output_dir, from_version)
     new = load_manifest(output_dir, to_version)  # None → CURRENT
 
-    # XOR-combined per-bucket (hash, rows) of the OLD version: a plain-key
+    # combined per-bucket (rows, spans, hash) of the OLD version: a plain-key
     # entry matching it is a compaction product, not new data
-    old_stats: dict[int, tuple[int, int]] = {}
-    for k, e in old["buckets"].items():
-        b = int(k.split("/")[-1])
-        h, t = old_stats.get(b, (0, 0))
-        old_stats[b] = (h ^ int(e["partition_hash"], 16), t + e["turn_count"])
+    old_stats = _combine(old["buckets"])
 
     by_run: dict[str, list[int]] = {}
     for k, e in new["buckets"].items():
@@ -348,25 +351,14 @@ def read_incremental(
         ):
             continue  # identical recommit (e.g. replayed streaming epoch)
         b = int(k.split("/")[-1])
-        if "/" not in k and old_stats.get(b) == (
-            int(e["partition_hash"], 16),
+        t, _, h = old_stats.get(b, (None, None, None))
+        if "/" not in k and (t, h) == (
             e["turn_count"],
+            int(e["partition_hash"], 16),
         ):
             continue  # compacted: same rows under a new key/run
         by_run.setdefault(e["run_id"], []).append(b)
-
-    frames = [
-        spark.read.option("basePath", _run_dir(output_dir, rid)).parquet(
-            *[os.path.join(_run_dir(output_dir, rid), f"bucket={b}") for b in sorted(set(bs))]
-        )
-        for rid, bs in sorted(by_run.items())
-    ]
-    if not frames:
-        return _empty_frame(spark, new)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    return _read_runs(spark, output_dir, new, by_run)
 
 
 #: certification columns for the extraction tables (the default schema);
@@ -377,43 +369,126 @@ DEFAULT_STATS = {
 }
 
 
-def _stats_of(manifest: dict) -> tuple[list, str | None]:
-    s = manifest.get("stats") or DEFAULT_STATS
-    return list(s["hash_cols"]), s.get("sum_col")
+def _bucket_stats(df: DataFrame, stats: dict = DEFAULT_STATS) -> dict:
+    """``{bucket: row(turn_count, span_count, partition_hash)}`` recomputed
+    from data in one aggregate — the certification every commit and
+    :func:`verify` use. ``bit_xor(xxhash64(...))`` is order-insensitive AND
+    XOR-combinable: the hash of a union of disjoint row sets is the XOR of
+    their hashes, which is what lets epoch-scoped entries of one bucket be
+    checked against its merged data (:func:`_combine`).
 
-
-def _bucket_stats(
-    written: DataFrame,
-    hash_cols: list | tuple | None = None,
-    sum_col: str | None = DEFAULT_STATS["sum_col"],
-) -> list:
-    """Per-bucket (turn_count, span_count, partition_hash) recomputed from
-    written partitions — the read-back certification every commit path uses.
-    ``bit_xor(xxhash64(...))`` is order-insensitive AND XOR-combinable:
-    the hash of a union of disjoint row sets is the XOR of their hashes,
-    which is what lets :func:`compact` verify a merged bucket against the
-    epoch-scoped entries it collapses without rereading the old dirs.
-
-    ``hash_cols``/``sum_col`` default to the extraction schema; generic
-    tables (:func:`commit_table`) pass their own and the choice is recorded
-    in the manifest's ``stats`` block so later compactions recompute the
-    same certification."""
-    hc = hash_cols or DEFAULT_STATS["hash_cols"]
-    sc = sum_col
-    return (
-        written.groupBy("bucket")
+    ``stats`` names the hashed columns and the summed one (default: the
+    extraction schema); generic tables (:func:`commit_table`) record their
+    own choice in the manifest's ``stats`` block so later compactions
+    recompute the same certification."""
+    sc = stats.get("sum_col")
+    rows = (
+        df.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("turn_count"),
-            (
-                F.sum(sc) if sc else F.lit(0).cast("long")
-            ).alias("span_count"),
+            (F.sum(sc) if sc else F.lit(0).cast("long")).alias("span_count"),
             F.format_string(
                 "%x",
-                F.bit_xor(F.xxhash64(*[F.col(c) for c in hc])),
+                F.bit_xor(F.xxhash64(*[F.col(c) for c in stats["hash_cols"]])),
             ).alias("partition_hash"),
         )
         .collect()
     )
+    return {int(r["bucket"]): r for r in rows}
+
+
+def _stat(e) -> tuple[int, int, int]:
+    return (
+        int(e["turn_count"]),
+        int(e["span_count"] or 0),
+        int(e["partition_hash"], 16),
+    )
+
+
+def _combine(entries: dict) -> dict[int, tuple[int, int, int]]:
+    """Per-bucket ``(turns, spans, hash)`` of manifest entries keyed
+    ``"<bucket>"`` or ``"<epoch>/<bucket>"``: counts sum, hashes XOR."""
+    out: dict[int, tuple[int, int, int]] = {}
+    for k, e in entries.items():
+        b = int(k.split("/")[-1])
+        t, s, h = out.get(b, (0, 0, 0))
+        et, es, eh = _stat(e)
+        out[b] = (t + et, s + es, h ^ eh)
+    return out
+
+
+def _bad_buckets(want: dict, got: dict) -> list[int]:
+    """Buckets where combined entries (:func:`_combine`) disagree with
+    recomputed stats (:func:`_bucket_stats`). A bucket absent on either
+    side counts as ``(0, 0, 0)``: an entry with no rows must have no data,
+    and data must have an entry."""
+    zero = (0, 0, 0)
+    return sorted(
+        b
+        for b in set(want) | set(got)
+        if want.get(b, zero) != (_stat(got[b]) if b in got else zero)
+    )
+
+
+def verify(
+    spark: SparkSession, output_dir: str, entries: dict | None = None
+) -> tuple[int, int, bool]:
+    """Recompute :func:`_bucket_stats` over :func:`read_results` and check
+    it bucket by bucket against ``entries`` (``{key: entry}``, CURRENT's
+    entries by default; any mapping with ``partition_hash``/``turn_count``/
+    ``span_count`` works, e.g. lineage rows keyed by bucket). Returns the
+    recomputed ``(turns, spans, ok)``."""
+    m = load_manifest(output_dir)
+    got = _bucket_stats(
+        read_results(spark, output_dir, m["version"]),
+        m.get("stats") or DEFAULT_STATS,
+    )
+    bad = _bad_buckets(_combine(m["buckets"] if entries is None else entries), got)
+    return (
+        sum(_stat(r)[0] for r in got.values()),
+        sum(_stat(r)[1] for r in got.values()),
+        not bad,
+    )
+
+
+def _write_run(
+    df: DataFrame, output_dir: str, run_id: str, stats: dict = DEFAULT_STATS
+) -> dict:
+    """The catalog's one write: ``df`` (already carrying ``bucket``) lands
+    in the fresh immutable run dir ``data/<run_id>/bucket=*``, is read back
+    and certified by :func:`_bucket_stats`. Returns ``{bucket: stats row}``.
+
+    The read-back uses the frame's own schema: a zero-row ``partitionBy``
+    write leaves only ``_SUCCESS``, on which schema inference raises
+    UNABLE_TO_INFER_SCHEMA — with the schema it is a readable empty frame,
+    so an all-empty commit degrades to tombstone entries."""
+    rdir = _run_dir(output_dir, run_id)
+    df.write.mode("errorifexists").partitionBy("bucket").parquet(rdir)
+    written = (
+        df.sparkSession.read.schema(df.schema).option("basePath", rdir).parquet(rdir)
+    )
+    return _bucket_stats(written, stats)
+
+
+def _entry(run_id: str, snapshot: str, row) -> dict:
+    """Manifest entry for one key from its :func:`_bucket_stats` row; a
+    None row is the tombstone of a bucket empty under ``snapshot``."""
+    if row is None:
+        return {
+            "run_id": None,
+            "snapshot": snapshot,
+            "partition_hash": EMPTY_BUCKET_HASH,
+            "turn_count": 0,
+            "span_count": 0,
+        }
+    t, s, _ = _stat(row)
+    return {
+        "run_id": run_id,
+        "snapshot": snapshot,
+        "partition_hash": row["partition_hash"],
+        "turn_count": t,
+        "span_count": s,
+    }
 
 
 def compact(
@@ -438,9 +513,10 @@ def compact(
     left untouched), which is how a 100 TB table compacts in bounded units.
 
     Integrity: the compacted per-bucket hash must equal the XOR of the
-    merged entries' hashes (see :func:`_bucket_stats`); counts must sum.
-    On mismatch :class:`CompactionIntegrityError` aborts BEFORE the swap —
-    CURRENT is untouched and the half-written dir is vacuumable.
+    merged entries' hashes and the counts must sum (:func:`_combine`, the
+    same comparison :func:`verify` makes). On mismatch
+    :class:`CompactionIntegrityError` aborts BEFORE the swap — CURRENT is
+    untouched and the half-written dir is vacuumable.
 
     Snapshot identity: a bucket whose merged entries all share one source
     snapshot keeps it (batch resume stays a no-op); mixed-epoch buckets
@@ -450,83 +526,58 @@ def compact(
     _publish_pending(output_dir)
     m = load_manifest(output_dir)
     sel = None if buckets is None else set(buckets)
-
-    def _selected(key: str) -> bool:
-        return sel is None or int(key.split("/")[-1]) in sel
-
-    merged = {k: e for k, e in m["buckets"].items() if _selected(k)}
+    merged = {
+        k: e
+        for k, e in m["buckets"].items()
+        if sel is None or int(k.split("/")[-1]) in sel
+    }
     if not merged:
         return m
-
-    expected: dict[int, tuple[int, int, int]] = {}
     snaps: dict[int, set] = {}
     for k, e in merged.items():
-        b = int(k.split("/")[-1])
-        t, s, h = expected.get(b, (0, 0, 0))
-        expected[b] = (
-            t + int(e["turn_count"]),
-            s + int(e["span_count"]),
-            h ^ int(e["partition_hash"], 16),
-        )
-        snaps.setdefault(b, set()).add(e["snapshot"])
+        snaps.setdefault(int(k.split("/")[-1]), set()).add(e["snapshot"])
 
     run_id = f"compact-v{m['version']}-{uuid.uuid4().hex[:8]}"
     rows = read_results(spark, output_dir, version=m["version"])
     if sel is not None:
         rows = rows.filter(F.col("bucket").isin(sorted(sel)))
-    rdir = _run_dir(output_dir, run_id)
-    rows.write.mode("errorifexists").partitionBy("bucket").parquet(rdir)
-    written = _read_written_run(spark, rdir, rows.schema)
-    hash_cols, sum_col = _stats_of(m)
-    got = {
-        int(r["bucket"]): (
-            int(r["turn_count"]),
-            int(r["span_count"] or 0),
-            int(r["partition_hash"], 16),
-        )
-        for r in _bucket_stats(written, hash_cols, sum_col)
-    }
-    want = {b: v for b, v in expected.items() if v[0] > 0}
-    if got != want:
-        bad = sorted(set(got) ^ set(want)) or sorted(
-            b for b in want if got.get(b) != want[b]
-        )
+    stats = _write_run(rows, output_dir, run_id, m.get("stats") or DEFAULT_STATS)
+    bad = _bad_buckets(_combine(merged), stats)
+    if bad:
         raise CompactionIntegrityError(
             f"compacted buckets {bad} do not match the manifest "
             f"(run dir {run_id} left orphaned; CURRENT not advanced)"
         )
-
     updates = {
-        str(b): {
-            "run_id": run_id if t > 0 else None,
-            "snapshot": (
-                next(iter(snaps[b]))
-                if len(snaps[b]) == 1
-                else f"compacted:v{m['version']}"
-            ),
-            "partition_hash": format(h, "x"),
-            "turn_count": t,
-            "span_count": s,
+        str(b): _entry(
+            run_id,
+            next(iter(ss)) if len(ss) == 1 else f"compacted:v{m['version']}",
+            stats.get(b),
+        )
+        for b, ss in snaps.items()
+    }
+
+    def _carry(src: dict) -> dict:
+        # full key replacement for the merged keys: carry forward every
+        # OTHER key and the table's blocks. The writer family survives the
+        # rewrite (a compacted streaming catalog must still refuse batch
+        # writers, and vice versa); it is inferred for pre-origin manifests
+        # while the epoch keys still show it.
+        return {
+            "version": src["version"],
+            "buckets": {k: e for k, e in src["buckets"].items() if k not in merged},
+            "stats": src.get("stats"),
+            "schema": src.get("schema"),
+            "n_buckets": src.get("n_buckets"),
+            "origin": _catalog_origin(src),
         }
-        for b, (t, s, h) in expected.items()
-    }
-    # full key replacement for the merged keys: carry forward every OTHER
-    # key, then CAS on top of the version we compacted. If a concurrent
-    # writer (e.g. the streaming sink) committed meanwhile, retry on the
-    # fresh manifest — safe iff every key we merged is still there
-    # unchanged (new epochs are simply carried forward; a replaced/removed
-    # merged key means our run dir no longer reflects the table → abort).
-    base = {
-        "version": m["version"],
-        "buckets": {k: e for k, e in m["buckets"].items() if k not in merged},
-        "stats": m.get("stats"),
-        "schema": m.get("schema"),
-        "n_buckets": m.get("n_buckets"),
-        # keep the writer family across the rewrite (a compacted streaming
-        # catalog must still refuse batch writers, and vice versa); infer
-        # it for pre-origin manifests while the epoch keys still show it
-        "origin": _catalog_origin(m),
-    }
+
+    # CAS on top of the version we compacted. If a concurrent writer (e.g.
+    # the streaming sink) committed meanwhile, retry on the fresh manifest
+    # — safe iff every key we merged is still there unchanged (new epochs
+    # are simply carried forward; a replaced/removed merged key means our
+    # run dir no longer reflects the table → abort).
+    base = _carry(m)
     while True:
         try:
             return _commit_manifest(output_dir, base, updates)
@@ -540,18 +591,7 @@ def compact(
                         f"(run dir {run_id} left orphaned; CURRENT not "
                         "advanced by this compaction)"
                     )
-            base = {
-                "version": fresh["version"],
-                "buckets": {
-                    k: e
-                    for k, e in fresh["buckets"].items()
-                    if k not in merged
-                },
-                "stats": fresh.get("stats"),
-                "schema": fresh.get("schema"),
-                "n_buckets": fresh.get("n_buckets"),
-                "origin": _catalog_origin(fresh),
-            }
+            base = _carry(fresh)
 
 
 def vacuum(
@@ -710,14 +750,15 @@ def run_extraction_job_atomic(
     ``output_dir`` — the engine's one batch extraction job.
 
     Scale shape: ONE source scan extracts all pending buckets into an
-    immutable per-run dir; commits then follow in ``buckets_per_commit``
-    units, with stats recomputed from the WRITTEN partitions, and each unit
-    becomes visible via a manifest swap — so a kill at any point leaves
-    readers on the previous fully-consistent version (the kill/rerun test
-    drives ``fail_after_commits`` through every position). Resume skips the
-    buckets CURRENT already commits under the same source snapshot. Lineage
-    parquet rows are appended BEFORE the swap: the manifest is the
-    visibility authority, the lineage table the audit log.
+    immutable per-run dir, and ONE aggregate over the WRITTEN partitions
+    certifies them all (:func:`_write_run`); commits then follow in
+    ``buckets_per_commit`` units, each made visible by a manifest swap —
+    so a kill at any point leaves readers on the previous fully-consistent
+    version (the kill/rerun test drives ``fail_after_commits`` through
+    every position). Resume skips the buckets CURRENT already commits
+    under the same source snapshot. Lineage parquet rows are appended
+    BEFORE the swap: the manifest is the visibility authority, the lineage
+    table the audit log.
     """
     from ..operators.extraction import extract_turns
 
@@ -797,66 +838,17 @@ def run_extraction_job_atomic(
             if len(pending) == n_buckets
             else bucketed.filter(F.col("bucket").isin(pending))
         )
-        extracted = extract_turns(subset, mode=mode).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int"),
-        )
-        rdir = _run_dir(output_dir, run_id)
-        extracted.write.mode("errorifexists").partitionBy("bucket").parquet(rdir)
+        extracted = with_bucket(extract_turns(subset, mode=mode), n_buckets)
+        stats = _write_run(extracted, output_dir, run_id)
         if fail_after_commits == 0:
             # kill-test hook: die after the (invisible) data write, before
             # any manifest swap — the hardest crash position
             raise SimulatedFailure(f"injected failure before first commit (run {run_id})")
-        written = _read_written_run(spark, rdir, extracted.schema)
 
         for i in range(0, len(pending), buckets_per_commit):
             batch = pending[i : i + buckets_per_commit]
-            stats = _bucket_stats(
-                written.filter(F.col("bucket").isin(batch))  # partition-pruned
-            )
-            by_bucket = {int(r["bucket"]): r for r in stats}
-            updates: dict[str, dict] = {}
-            lineage_rows = []
-            for b in batch:
-                r = by_bucket.get(b)
-                if r is None:
-                    # empty under this snapshot: committed with no data dir
-                    updates[str(b)] = {
-                        "run_id": None,
-                        "snapshot": snapshot,
-                        "partition_hash": "0",
-                        "turn_count": 0,
-                        "span_count": 0,
-                    }
-                    lineage_rows.append(
-                        (run_id, snapshot, b, "0", 0, 0, STATUS_COMPLETED, None)
-                    )
-                else:
-                    updates[str(b)] = {
-                        "run_id": run_id,
-                        "snapshot": snapshot,
-                        "partition_hash": r["partition_hash"],
-                        "turn_count": int(r["turn_count"]),
-                        "span_count": int(r["span_count"] or 0),
-                    }
-                    lineage_rows.append(
-                        (
-                            run_id,
-                            snapshot,
-                            b,
-                            r["partition_hash"],
-                            int(r["turn_count"]),
-                            int(r["span_count"] or 0),
-                            STATUS_COMPLETED,
-                            None,
-                        )
-                    )
-            (
-                spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
-                .withColumn("committed_at", F.current_timestamp())
-                .write.mode("append")
-                .parquet(_lineage_dir(output_dir))
-            )
+            updates = {str(b): _entry(run_id, snapshot, stats.get(b)) for b in batch}
+            append_lineage(spark, output_dir, run_id, updates)
             manifest = _commit_manifest(output_dir, manifest, updates)
             processed.extend(batch)
             commits += 1
@@ -897,91 +889,48 @@ def commit_stream_batch(
     if batch_df.isEmpty():
         return None
     _publish_pending(output_dir)
-    manifest = load_manifest(output_dir)
-    if _catalog_origin(manifest) in ("batch", "table"):
-        # the inverse of run_extraction_job_atomic's guard: batch-committed
-        # keys and epoch-scoped streaming keys for the same rows would BOTH
-        # stay visible (read_results unions all keys), double-emitting
-        # them — and a later compact() would fold the duplicates in
-        # permanently. Refuse the ill-defined mix. Compaction-produced
-        # plain keys are fine (origin stays 'stream' across compact()), so
-        # a long-running stream survives periodic compaction.
-        raise ValueError(
-            "catalog contains batch-committed keys; streaming commits "
-            "refuse to mix with them (use a fresh output_dir)"
-        )
-    if manifest.get("stats") not in (None, DEFAULT_STATS):
-        # streaming entries are certified with DEFAULT_STATS columns;
-        # committing them into a generic commit_table certification would
-        # carry its stats/schema blocks over entries they don't describe
-        raise ValueError(
-            f"catalog at {output_dir} is certified with stats columns "
-            f"{manifest['stats']}; the streaming sink refuses to mix "
-            "certifications (vacuum/recreate the table)"
-        )
-    run_id = f"epoch{epoch}-{uuid.uuid4().hex[:8]}"
-    bucketed = batch_df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-    )
-    rdir = _run_dir(output_dir, run_id)
-    bucketed.write.mode("errorifexists").partitionBy("bucket").parquet(rdir)
-    written = _read_written_run(spark, rdir, bucketed.schema)
-    stats = _bucket_stats(written)
-    snapshot = f"epoch:{epoch}"
-    updates = {
-        f"{epoch}/{int(r['bucket'])}": {
-            "run_id": run_id,
-            "snapshot": snapshot,
-            "partition_hash": r["partition_hash"],
-            "turn_count": int(r["turn_count"]),
-            "span_count": int(r["span_count"] or 0),
-        }
-        for r in stats
-    }
-    lineage_rows = [
-        (
-            run_id,
-            snapshot,
-            int(r["bucket"]),
-            r["partition_hash"],
-            int(r["turn_count"]),
-            int(r["span_count"] or 0),
-            STATUS_COMPLETED,
-            None,
-        )
-        for r in stats
-    ]
-    (
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
-        .withColumn("committed_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(_lineage_dir(output_dir))
-    )
-    # single streaming writer per checkpoint → CAS conflicts only on a true
-    # concurrent-writer misconfiguration; reload once then surface it
+
     def _base() -> dict:
         b = load_manifest(output_dir)
-        # re-run the entry guards on the RELOADED manifest: a batch writer
-        # that committed between the top-of-function check and this CAS
-        # would otherwise be silently re-stamped origin='stream', letting
-        # epoch keys land beside plain batch keys (double emission)
-        if _catalog_origin(b) in ("batch", "table"):
+        origin = _catalog_origin(b)
+        if origin in ("batch", "table"):
+            # the inverse of run_extraction_job_atomic's guard: plain keys
+            # of another writer family and epoch-scoped streaming keys for
+            # the same rows would BOTH stay visible (read_results unions all
+            # keys), double-emitting them — and a later compact() would fold
+            # the duplicates in permanently. Refuse the ill-defined mix.
+            # Compaction-produced plain keys are fine (origin stays 'stream'
+            # across compact()), so a long-running stream survives periodic
+            # compaction.
             raise ValueError(
-                "catalog gained batch-committed keys while this epoch was "
-                "being written; streaming commits refuse to mix with them "
-                "(use a fresh output_dir)"
+                f"catalog contains {origin}-committed keys; streaming "
+                "commits refuse to mix with them (use a fresh output_dir)"
             )
         if b.get("stats") not in (None, DEFAULT_STATS):
+            # streaming entries are certified with DEFAULT_STATS columns;
+            # committing them into a generic commit_table certification
+            # would carry its stats/schema blocks over entries they don't
+            # describe
             raise ValueError(
-                f"catalog at {output_dir} gained a generic certification "
-                f"({b['stats']}) while this epoch was being written; "
-                "refusing to mix"
+                f"catalog at {output_dir} is certified with stats columns "
+                f"{b['stats']}; the streaming sink refuses to mix "
+                "certifications (vacuum/recreate the table)"
             )
         b["origin"] = "stream"
         return b
 
+    base = _base()
+    run_id = f"epoch{epoch}-{uuid.uuid4().hex[:8]}"
+    stats = _write_run(with_bucket(batch_df, n_buckets), output_dir, run_id)
+    snapshot = f"epoch:{epoch}"
+    updates = {f"{epoch}/{b}": _entry(run_id, snapshot, r) for b, r in stats.items()}
+    append_lineage(spark, output_dir, run_id, updates)
+    # single streaming writer per checkpoint → CAS conflicts only on a true
+    # concurrent-writer misconfiguration; reload once (re-running the
+    # guards: a writer of another family may have committed meanwhile)
+    # then surface it
     try:
-        return _commit_manifest(output_dir, _base(), updates)
+        return _commit_manifest(output_dir, base, updates)
     except CommitConflict:
         return _commit_manifest(output_dir, _base(), updates)
 
@@ -1008,34 +957,19 @@ def commit_table(
     plain bucket keys supersede the old (full-snapshot-replace semantics —
     use the extraction jobs for incremental bucket-level resume).
     """
-    import json as _json
-
-    spark = df.sparkSession
-    hc = [str(c) for c in (hash_cols or (key_col,))]
     run_id = uuid.uuid4().hex
-    bucketed = df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
-    )
-    rdir = _run_dir(output_dir, run_id)
-    bucketed.write.mode("errorifexists").partitionBy("bucket").parquet(rdir)
-    written = _read_written_run(spark, rdir, bucketed.schema)
+    want_stats = {
+        "hash_cols": [str(c) for c in (hash_cols or (key_col,))],
+        "sum_col": sum_col,
+    }
+    bucketed = with_bucket(df, n_buckets, key_col)
+    stats = _write_run(bucketed, output_dir, run_id, want_stats)
     snap = snapshot or f"table:{run_id[:8]}"
-    by_bucket = {int(r["bucket"]): r for r in _bucket_stats(written, hc, sum_col)}
     # every bucket gets an entry — run_id=None tombstones buckets empty in
     # THIS snapshot, so a re-commit truly replaces (no stale rows from a
     # previous snapshot, whatever its n_buckets or key form was: the base
     # below carries no prior keys)
-    updates = {}
-    for b in range(n_buckets):
-        r = by_bucket.get(b)
-        updates[str(b)] = {
-            "run_id": run_id if r is not None else None,
-            "snapshot": snap,
-            "partition_hash": r["partition_hash"] if r is not None else "0",
-            "turn_count": int(r["turn_count"]) if r is not None else 0,
-            "span_count": int(r["span_count"] or 0) if r is not None else 0,
-        }
-    want_stats = {"hash_cols": hc, "sum_col": sum_col}
+    updates = {str(b): _entry(run_id, snap, stats.get(b)) for b in range(n_buckets)}
     while True:
         _publish_pending(output_dir)
         m = load_manifest(output_dir)
@@ -1057,7 +991,7 @@ def commit_table(
             "version": m["version"],
             "buckets": {},  # full-snapshot replace
             "stats": want_stats,
-            "schema": _json.loads(bucketed.schema.json()),
+            "schema": json.loads(bucketed.schema.json()),
             "origin": "table",
         }
         try:

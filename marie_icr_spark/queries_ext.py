@@ -1749,55 +1749,13 @@ def q_lineage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("bucket", "partition_hash", "turn_count", "span_count")
             .dropDuplicates(["bucket"])
         )
-        recomputed = (
-            M.read_results(spark, out)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rc_turns"),
-                F.sum("span_count").alias("rc_spans"),
-                F.format_string(
-                    "%x",
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.col("conv_id"), F.col("turn_idx"),
-                            F.col("extracted_text"),
-                        )
-                    ),
-                ).alias("rc_hash"),
-            )
+        # a zero-count lineage row for a bucket that is legitimately empty
+        # on disk verifies as correct; any other unmatched bucket fails
+        turns, spans, ok = M.verify(
+            spark, out, {str(r["bucket"]): r.asDict() for r in lin.collect()}
         )
-        j = lin.join(recomputed, "bucket", "full_outer")
-        # null-safe: an unmatched full_outer row (bucket in results but not
-        # lineage, or vice versa) must FAIL verification — EXCEPT a
-        # zero-count lineage row for a bucket that is legitimately empty on
-        # disk (no recomputed row), which verifies as correct.
-        data_match = (
-            (F.col("partition_hash") == F.col("rc_hash"))
-            & (F.col("turn_count") == F.col("rc_turns"))
-            & (F.col("span_count") == F.col("rc_spans"))
-        )
-        empty_ok = (
-            (F.col("partition_hash") == F.lit(L.EMPTY_BUCKET_HASH))
-            & (F.col("turn_count") == 0)
-            & F.col("rc_turns").isNull()
-        )
-        row = j.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("rc_turns")).alias("turns"),
-            F.sum(F.col("rc_spans")).alias("spans"),
-            F.min(
-                F.coalesce(data_match, F.lit(False))
-                | F.coalesce(empty_ok, F.lit(False))
-            ).alias("ok"),
-        ).collect()[0]
         return spark.createDataFrame(
-            [
-                (
-                    int(row["turns"]),
-                    int(row["spans"]),
-                    bool(row["ok"]),
-                )
-            ],
+            [(turns, spans, ok)],
             "total_turns long, total_spans long, all_buckets_verified boolean",
         )
     finally:
@@ -2676,54 +2634,9 @@ def q_atomic_commit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         M.run_extraction_job_atomic(spark, t, out, n_buckets=8,
                                     buckets_per_commit=2)
 
-        m = M.load_manifest(out)
-        recomputed = (
-            M.read_results(spark, out)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rc_turns"),
-                F.sum("span_count").alias("rc_spans"),
-                F.format_string(
-                    "%x",
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.col("conv_id"), F.col("turn_idx"),
-                            F.col("extracted_text"),
-                        )
-                    ),
-                ).alias("rc_hash"),
-            )
-        )
-        ment = spark.createDataFrame(
-            [
-                (int(b), e["partition_hash"], e["turn_count"], e["span_count"])
-                for b, e in m["buckets"].items()
-            ],
-            "bucket int, partition_hash string, turn_count long, span_count long",
-        )
-        j = ment.join(recomputed, "bucket", "full_outer")
-        data_match = (
-            (F.col("partition_hash") == F.col("rc_hash"))
-            & (F.col("turn_count") == F.col("rc_turns"))
-            & (F.col("span_count") == F.col("rc_spans"))
-        )
-        empty_ok = (F.col("turn_count") == 0) & F.col("rc_turns").isNull()
-        row = j.agg(
-            F.sum("rc_turns").alias("turns"),
-            F.sum("rc_spans").alias("spans"),
-            F.min(
-                F.coalesce(data_match, F.lit(False))
-                | F.coalesce(empty_ok, F.lit(False))
-            ).alias("ok"),
-        ).collect()[0]
+        turns, spans, ok = M.verify(spark, out)
         return spark.createDataFrame(
-            [
-                (
-                    int(row["turns"]),
-                    int(row["spans"]),
-                    bool(row["ok"]) and partial_ok and m["version"] == 4,
-                )
-            ],
+            [(turns, spans, ok and partial_ok and M.current_version(out) == 4)],
             "total_turns long, total_spans long, all_commits_atomic boolean",
         )
     finally:
@@ -2844,47 +2757,10 @@ def q_stream_atomic_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-        m = M.load_manifest(out)
-        epochs = {k.split("/")[0] for k in m["buckets"]}
-        recomputed = (
-            M.read_results(spark, out)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rc_turns"),
-                F.sum("span_count").alias("rc_spans"),
-            )
-        )
-        # per-bucket manifest sums (buckets repeat across epochs)
-        ment = spark.createDataFrame(
-            [
-                (int(k.split("/")[-1]), e["turn_count"], e["span_count"])
-                for k, e in m["buckets"].items()
-            ],
-            "bucket int, turn_count long, span_count long",
-        ).groupBy("bucket").agg(
-            F.sum("turn_count").alias("m_turns"),
-            F.sum("span_count").alias("m_spans"),
-        )
-        j = ment.join(recomputed, "bucket", "full_outer")
-        row = j.agg(
-            F.sum("rc_turns").alias("turns"),
-            F.sum("rc_spans").alias("spans"),
-            F.min(
-                F.coalesce(
-                    (F.col("m_turns") == F.col("rc_turns"))
-                    & (F.col("m_spans") == F.col("rc_spans")),
-                    F.lit(False),
-                )
-            ).alias("ok"),
-        ).collect()[0]
+        epochs = {k.split("/")[0] for k in M.load_manifest(out)["buckets"]}
+        turns, spans, ok = M.verify(spark, out)
         return spark.createDataFrame(
-            [
-                (
-                    int(row["turns"]),
-                    int(row["spans"]),
-                    bool(row["ok"]) and len(epochs) >= 2,
-                )
-            ],
+            [(turns, spans, ok and len(epochs) >= 2)],
             "total_turns long, total_spans long, all_epochs_atomic boolean",
         )
     finally:
@@ -2941,54 +2817,9 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                      if e["run_id"] is not None}) == 1
         )
         orphans = [p for p in M.vacuum(out) if f"{_os.sep}data{_os.sep}" in p]
-
-        recomputed = (
-            M.read_results(spark, out)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rc_turns"),
-                F.sum("span_count").alias("rc_spans"),
-                F.format_string(
-                    "%x",
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.col("conv_id"), F.col("turn_idx"),
-                            F.col("extracted_text"),
-                        )
-                    ),
-                ).alias("rc_hash"),
-            )
-        )
-        ment = spark.createDataFrame(
-            [
-                (int(b), e["partition_hash"], e["turn_count"], e["span_count"])
-                for b, e in m["buckets"].items()
-            ],
-            "bucket int, partition_hash string, turn_count long, span_count long",
-        )
-        j = ment.join(recomputed, "bucket", "full_outer")
-        data_match = (
-            (F.col("partition_hash") == F.col("rc_hash"))
-            & (F.col("turn_count") == F.col("rc_turns"))
-            & (F.col("span_count") == F.col("rc_spans"))
-        )
-        empty_ok = (F.col("turn_count") == 0) & F.col("rc_turns").isNull()
-        row = j.agg(
-            F.sum("rc_turns").alias("turns"),
-            F.sum("rc_spans").alias("spans"),
-            F.min(
-                F.coalesce(data_match, F.lit(False))
-                | F.coalesce(empty_ok, F.lit(False))
-            ).alias("ok"),
-        ).collect()[0]
+        turns, spans, ok = M.verify(spark, out)
         return spark.createDataFrame(
-            [
-                (
-                    int(row["turns"]),
-                    int(row["spans"]),
-                    bool(row["ok"]) and keys_ok and len(orphans) == 2,
-                )
-            ],
+            [(turns, spans, ok and keys_ok and len(orphans) == 2)],
             "total_turns long, total_spans long, compaction_atomic boolean",
         )
     finally:

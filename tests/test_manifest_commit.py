@@ -770,7 +770,7 @@ def test_stream_sink_refuses_batch_catalog(spark, sdf, tmp_path_factory):
     M.commit_table(
         batch, out2, key_col="conv_id", hash_cols=("conv_id", "turn_idx")
     )
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="table-committed"):
         M.commit_stream_batch(batch, 0, out2, n_buckets=N_BUCKETS)
 
     # stream → compact → stream stays legal (origin survives the rewrite)
@@ -1216,7 +1216,7 @@ def test_commit_table_empty_frame_tombstones_all_buckets(
     """A zero-row commit (legitimate delete-everything snapshot) must
     commit tombstones, not crash: the partitionBy write leaves only
     _SUCCESS and the read-back needs the written frame's schema
-    (_read_written_run)."""
+    (_write_run)."""
     out = str(tmp_path_factory.mktemp("empty_commit"))
     df = spark.createDataFrame(
         [("a", "hello", 1)], "key string, body string, v int"
@@ -1375,3 +1375,43 @@ def test_lineage_rows_mirror_manifest_entries(spark, sdf, tmp_path_factory):
     sm = M.load_manifest(stream_out)
     assert {k.split("/")[0] for k in sm["buckets"]} == {"0", "1"}
     _assert_lineage_mirrors(spark, stream_out, lambda k, e: e["run_id"])
+
+
+def test_verify_flags_entries_that_disagree_with_data(
+    spark, sdf, tmp_path_factory
+):
+    """verify() on a clean catalog returns the exact totals; a tampered
+    hash, a tombstone over a bucket that has data, and a data bucket
+    missing from the entries each make it return ok=False. Readers only
+    surface data some entry references, so the last two are reached
+    through explicit ``entries`` (the lineage oracle's path)."""
+    from pyspark.sql import functions as F
+
+    from marie_icr_spark.operators.extraction import extract_turns
+
+    subset = M.with_bucket(sdf, N_BUCKETS).filter(
+        F.col("bucket") != 1
+    ).drop("bucket")
+    out = str(tmp_path_factory.mktemp("verify_neg"))
+    M.run_extraction_job_atomic(
+        spark, subset, out, n_buckets=N_BUCKETS, buckets_per_commit=PER_COMMIT
+    )
+    m = M.load_manifest(out)
+    assert m["buckets"]["1"]["run_id"] is None  # a clean tombstone
+    want = extract_turns(subset).agg(
+        F.count(F.lit(1)).alias("t"), F.sum("span_count").alias("s")
+    ).collect()[0]
+    assert M.verify(spark, out) == (want["t"], int(want["s"]), True)
+
+    k, e = next((k, e) for k, e in sorted(m["buckets"].items())
+                if e["turn_count"] > 0)
+    tombstoned = {**m["buckets"], k: M._entry(None, e["snapshot"], None)}
+    assert M.verify(spark, out, tombstoned)[2] is False
+    missing = {kk: ee for kk, ee in m["buckets"].items() if kk != k}
+    assert M.verify(spark, out, missing)[2] is False
+
+    flipped = format(int(e["partition_hash"], 16) ^ 1, "x")
+    M._commit_manifest(out, m, {k: {**e, "partition_hash": flipped}})
+    assert M.current_version(out) == m["version"] + 1
+    turns, spans, ok = M.verify(spark, out)
+    assert (turns, spans, ok) == (want["t"], int(want["s"]), False)
