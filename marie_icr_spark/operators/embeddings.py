@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from ..functions.columns import portable_hash31_py as _hash31
 from ..functions.columns import ws_tokens_py
+from ..session import local_frame
 
 DIMS = 64
 NGRAM = 3
@@ -131,7 +132,7 @@ def embed_topk(
         empty = T.StructType(
             schema.fields + [T.StructField("rank", T.IntegerType())]
         )
-        return spark.createDataFrame([], schema=empty)
+        return local_frame(spark, [], empty)
 
     bc = spark.sparkContext.broadcast((probe_ids, pm))
     n_probe = len(probe_ids)

@@ -15,8 +15,10 @@ import random
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.columns import round_half_up
+from ..session import local_frame
 
 QUANT = 1000
 # Multi-table random-hyperplane LSH: L tables × P planes. One table of many
@@ -254,6 +256,21 @@ def lsh_topk(emb: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
 IVF_K = 64
 IVF_ITERS = 2
 IVF_NPROBE = 2
+_CENTS_SCHEMA = T.StructType(
+    [
+        T.StructField(
+            "cents",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("cid", T.IntegerType()),
+                        T.StructField("cq", T.ArrayType(T.LongType())),
+                    ]
+                )
+            ),
+        )
+    ]
+)
 
 
 def _with_nearest_cids(
@@ -268,9 +285,10 @@ def _with_nearest_cids(
     array column evaluated JVM-side per input row — so K scales to
     thousands without growing the plan."""
     spark = df.sparkSession
-    one = spark.createDataFrame(
+    one = local_frame(
+        spark,
         [([(int(cid), [int(v) for v in cq]) for cid, cq in centroids],)],
-        "cents array<struct<cid:int,cq:array<bigint>>>",
+        _CENTS_SCHEMA,
     )
 
     def d2(cq):

@@ -104,17 +104,14 @@ def affected_convs_from_cdc(
         new_rows.select(F.col("bucket").cast("int").alias("bucket"))
         .distinct()
     )
+    old_rows = read_results(spark, results_dir, version=from_version)
+    old_side = old_rows.join(changed, "bucket", "left_semi")
     if removed:
-        changed = changed.unionByName(
-            spark.createDataFrame(
-                [(int(b),) for b in sorted(removed)], "bucket int"
-            )
-        ).distinct()
-    old_side = (
-        read_results(spark, results_dir, version=from_version)
-        .join(changed, "bucket", "left_semi")
-        .select("conv_id")
-    )
+        # emptied buckets have no new row to name them
+        old_side = old_side.unionByName(
+            old_rows.filter(F.col("bucket").isin(sorted(removed)))
+        )
+    old_side = old_side.select("conv_id")
     return (
         new_rows.select("conv_id").unionByName(old_side).distinct()
     )

@@ -15,6 +15,12 @@ appended before the manifest swap, so a crash can leave an audit row for a
 unit that never became visible; the rerun re-commits that bucket with the
 same deterministic content.
 
+Audit rows are driver-written like the manifest: the rows already live on
+the driver, so each commit unit writes them as one pyarrow parquet file
+(temp name, fsync, rename) — no Spark job and no Python worker per commit.
+Spark reads the directory as one table; files written by the earlier Spark
+appender read back the same.
+
 This module also holds what the writers share: the one bucket layout
 (``with_bucket``), the order-insensitive source fingerprint, and the empty
 results frame.
@@ -23,10 +29,15 @@ results frame.
 from __future__ import annotations
 
 import os
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import arrow_table, local_frame
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -61,7 +72,7 @@ def _empty_results_frame(spark: SparkSession) -> DataFrame:
     schema = T.StructType(
         list(EXTRACTED_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType())]
     )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key_col: str = "conv_id") -> DataFrame:
@@ -85,12 +96,13 @@ def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
     """Lineage rows, deduplicated on (run_id, source_snapshot_id, bucket):
     crash-replayed appends (streaming foreachBatch reruns, resumed batch
     jobs) may physically duplicate a row; all fields except committed_at are
-    deterministic, so read-side dedup presents exactly-once lineage."""
+    deterministic, so read-side dedup presents exactly-once lineage. A
+    catalog that never committed has no ``_lineage`` dir and reads empty; any
+    other read error (a corrupt audit file) is raised."""
     path = _lineage_dir(output_dir)
-    try:
-        df = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    if not os.path.isdir(path):
+        return local_frame(spark, [], LINEAGE_SCHEMA)
+    df = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     return df.dropDuplicates(["run_id", "source_snapshot_id", "bucket"])
 
 
@@ -100,7 +112,16 @@ def append_lineage(
     """Append one ``completed`` audit row per manifest entry of a commit
     unit (``{key: entry}``, keys ``"<bucket>"`` or ``"<epoch>/<bucket>"``).
     Every row carries the committing writer's ``run_id`` — also for a
-    tombstone entry, whose manifest ``run_id`` is None."""
+    tombstone entry, whose manifest ``run_id`` is None — and one
+    ``committed_at`` per call.
+
+    Written from the driver as one parquet file: complete and fsynced under
+    a hidden temp name (``.part-*.tmp``, which Spark readers skip), then
+    renamed into place, so a crash never leaves a half-visible file. Empty
+    ``entries`` write nothing."""
+    if not entries:
+        return
+    now = datetime.now(timezone.utc)
     rows = [
         (
             run_id,
@@ -110,13 +131,16 @@ def append_lineage(
             e["turn_count"],
             e["span_count"],
             STATUS_COMPLETED,
-            None,
+            now,
         )
         for k, e in entries.items()
     ]
-    (
-        spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        .withColumn("committed_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(_lineage_dir(output_dir))
-    )
+    ldir = _lineage_dir(output_dir)
+    os.makedirs(ldir, exist_ok=True)
+    name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(ldir, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(arrow_table(rows, LINEAGE_SCHEMA), f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, os.path.join(ldir, name))

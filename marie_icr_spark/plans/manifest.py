@@ -40,6 +40,14 @@ read it back, certify per-bucket stats in one aggregate), one
 (:func:`~.lineage.append_lineage`) before the swap, then the CAS. One
 check, :func:`verify`, recomputes the stats from what readers see and
 compares them with the entries.
+
+Everything a commit writes besides the data is driver-written with the
+same POSIX contract (complete + fsynced under a temp name, then
+``link(2)``/``rename(2)``): the manifest versions, CURRENT, and the lineage
+audit rows, which are one pyarrow parquet file per commit unit. A commit
+unit therefore runs no Spark job of its own, and driver-side rows become
+frames through :func:`~marie_icr_spark.session.local_frame`, never a
+Python list.
 """
 
 from __future__ import annotations
@@ -51,10 +59,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .lineage import (
     EMPTY_BUCKET_HASH,
     SimulatedFailure,
     _empty_results_frame,
+    _lineage_dir,
     append_lineage,
     source_fingerprint,
     with_bucket,
@@ -245,9 +255,7 @@ def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
     if manifest.get("schema"):
         from pyspark.sql import types as T
 
-        return spark.createDataFrame(
-            [], T.StructType.fromJson(manifest["schema"])
-        )
+        return local_frame(spark, [], T.StructType.fromJson(manifest["schema"]))
     return _empty_results_frame(spark)
 
 
@@ -601,7 +609,8 @@ def vacuum(
 ) -> list[str]:
     """Delete run dirs not referenced by any RETAINED manifest (orphans
     from crashed or superseded runs), manifests older than the retention
-    window, and leaked commit temp files. Returns the removed paths.
+    window, and leaked commit and lineage temp files. Returns the removed
+    paths.
     Never touches referenced data — safe to run any time no OTHER writer
     is mid-commit (same contract as Iceberg's expire_snapshots +
     remove_orphan_files).
@@ -728,6 +737,15 @@ def vacuum(
                 continue
             v = int(name[len("manifest-v"):-len(".json")])
             if v not in keep:
+                os.remove(p)
+                removed.append(p)
+    ldir = _lineage_dir(output_dir)
+    if os.path.isdir(ldir):
+        for name in sorted(os.listdir(ldir)):
+            p = os.path.join(ldir, name)
+            # a writer killed inside append_lineage before the rename —
+            # hidden from readers, and never renamed by anyone else
+            if name.startswith(".") and name.endswith(".tmp") and _old_enough(p):
                 os.remove(p)
                 removed.append(p)
     return removed

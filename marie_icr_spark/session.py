@@ -5,13 +5,17 @@ sizing, Arrow batching tuned for payload extraction) while remaining correct
 on local[N] for tests. The Arrow batch size plays the role of the reference's
 GPU-memory-scaled inference batch (marie/document/trocr_ocr_processor.py:251-331):
 payloads are KB-sized strings, so 2k rows/batch keeps Arrow buffers ~MBs.
+
+It also holds the one idiom for small frames built from driver-side rows
+(:func:`local_frame`).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 ARROW_BATCH_ROWS = 8192
 
@@ -47,3 +51,23 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def arrow_table(rows, schema: T.StructType):
+    """Driver-side ``rows`` (tuples in ``schema`` field order) as a
+    ``pa.Table`` whose schema is ``to_arrow_schema(schema)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A frame of a few driver-side ``rows`` (tuples in ``schema`` field
+    order). The rows travel as one Arrow table, so the plan is a
+    ``LocalTableScan``: no Python RDD, hence no Python task per partition
+    when the frame is consumed (``createDataFrame(list)`` launches a stage of
+    ``defaultParallelism`` Python tasks, even for zero rows)."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema=schema)

@@ -1415,3 +1415,158 @@ def test_verify_flags_entries_that_disagree_with_data(
     assert M.current_version(out) == m["version"] + 1
     turns, spans, ok = M.verify(spark, out)
     assert (turns, spans, ok) == (want["t"], int(want["s"]), False)
+
+
+_AUDIT_ENTRIES = {
+    "0": {"snapshot": "s1", "partition_hash": "cd", "turn_count": 2, "span_count": 7},
+    "3/1": {"snapshot": "epoch:3", "partition_hash": "0", "turn_count": 0, "span_count": 0},
+}
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_lineage_runs_no_spark_job(spark, tmp_path):
+    """A commit unit's audit rows are written from the driver: no Spark job
+    (hence no Python task) runs, and the rows read back unchanged."""
+    from marie_icr_spark.plans.lineage import (
+        LINEAGE_SCHEMA,
+        append_lineage,
+        read_lineage,
+    )
+
+    out = str(tmp_path)
+    # the job-group probe does see a job when one runs
+    assert _jobs_in_group(spark, "lineage-probe", lambda: spark.range(3).count())
+    assert _jobs_in_group(
+        spark,
+        "lineage-append",
+        lambda: append_lineage(spark, out, "r1", _AUDIT_ENTRIES),
+    ) == []
+    lin = read_lineage(spark, out)
+    assert lin.schema == LINEAGE_SCHEMA
+    rows = sorted(tuple(r) for r in lin.collect())
+    assert [r[:7] for r in rows] == [
+        ("r1", "epoch:3", 1, "0", 0, 0, "completed"),
+        ("r1", "s1", 0, "cd", 2, 7, "completed"),
+    ]
+    assert rows[0][7] is not None and rows[0][7] == rows[1][7]
+    # no leftover temp; empty entries write nothing
+    append_lineage(spark, out, "r2", {})
+    assert [n for n in os.listdir(os.path.join(out, "_lineage"))
+            if not n.startswith("part-r1-")] == []
+
+
+def test_lineage_from_the_spark_appender_still_reads(spark, tmp_path):
+    """A ``_lineage`` dir holding a row written by the earlier Spark
+    appender (a Python-list frame + ``current_timestamp``, reproduced here)
+    reads back together with a driver-written row, in ``LINEAGE_SCHEMA``."""
+    from pyspark.sql import functions as F
+
+    from marie_icr_spark.plans.lineage import (
+        LINEAGE_SCHEMA,
+        STATUS_COMPLETED,
+        _lineage_dir,
+        append_lineage,
+        read_lineage,
+    )
+
+    out = str(tmp_path)
+    (
+        spark.createDataFrame(
+            [("old-run", "s0", 5, "ab", 3, 4, STATUS_COMPLETED, None)],
+            LINEAGE_SCHEMA,
+        )
+        .withColumn("committed_at", F.current_timestamp())
+        .write.mode("append")
+        .parquet(_lineage_dir(out))
+    )
+    append_lineage(spark, out, "new-run", {"0": _AUDIT_ENTRIES["0"]})
+    lin = read_lineage(spark, out)
+    assert lin.schema == LINEAGE_SCHEMA
+    got = sorted(tuple(r) for r in lin.collect())
+    assert [g[:7] for g in got] == [
+        ("new-run", "s1", 0, "cd", 2, 7, "completed"),
+        ("old-run", "s0", 5, "ab", 3, 4, "completed"),
+    ]
+    assert all(g[7] is not None for g in got)
+
+
+def test_read_lineage_raises_on_corrupt_audit_file(spark, tmp_path):
+    """Only a missing ``_lineage`` dir reads as "no lineage"; a truncated
+    audit file is an error, not an empty audit trail."""
+    from marie_icr_spark.plans.lineage import (
+        LINEAGE_SCHEMA,
+        _lineage_dir,
+        append_lineage,
+        read_lineage,
+    )
+
+    out = str(tmp_path)
+    empty = read_lineage(spark, out)
+    assert empty.schema == LINEAGE_SCHEMA and empty.count() == 0
+
+    append_lineage(spark, out, "r1", _AUDIT_ENTRIES)
+    (name,) = os.listdir(_lineage_dir(out))
+    path = os.path.join(_lineage_dir(out), name)
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(Exception, match="(?i)parquet|FAILED_READ_FILE"):
+        read_lineage(spark, out).collect()
+
+
+def test_vacuum_reclaims_old_lineage_tmp_only(tmp_path):
+    """A writer killed inside ``append_lineage`` leaves a hidden temp file:
+    vacuum removes it once older than ``min_age_seconds`` and keeps a fresh
+    one (it may belong to a writer still running) and the audit rows."""
+    import time
+
+    from marie_icr_spark.plans.lineage import _lineage_dir, append_lineage
+
+    out = str(tmp_path)
+    append_lineage(None, out, "r1", _AUDIT_ENTRIES)
+    ldir = _lineage_dir(out)
+    (audit,) = os.listdir(ldir)
+    old = os.path.join(ldir, ".part-dead-0.parquet.tmp")
+    fresh = os.path.join(ldir, ".part-live-1.parquet.tmp")
+    for p in (old, fresh):
+        with open(p, "wb") as f:
+            f.write(b"PAR1")
+    hour_ago = time.time() - 3600
+    os.utime(old, (hour_ago, hour_ago))
+
+    removed = M.vacuum(out, min_age_seconds=600)
+    assert removed == [old]
+    assert sorted(os.listdir(ldir)) == sorted([audit, os.path.basename(fresh)])
+    assert M.vacuum(out) == [fresh]
+
+
+def test_local_frame_is_a_local_table_scan(spark):
+    """``session.local_frame`` keeps the schema (flat, empty and nested
+    ``array<struct>``) and plans no Python RDD, unlike a list frame."""
+    from marie_icr_spark.operators.similarity import _CENTS_SCHEMA
+    from marie_icr_spark.plans.lineage import LINEAGE_SCHEMA
+    from marie_icr_spark.session import local_frame
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    row = ("r", "s", 1, "ab", 2, 3, "completed", None)
+    assert "ExistingRDD" in plan(spark.createDataFrame([row], LINEAGE_SCHEMA))
+    cents = [([(1, [1, -2]), (2, [3])],)]
+    for rows, schema in ((
+        [row, row], LINEAGE_SCHEMA), ([], LINEAGE_SCHEMA), (cents, _CENTS_SCHEMA)
+    ):
+        df = local_frame(spark, rows, schema)
+        assert df.schema == schema
+        assert "ExistingRDD" not in plan(df)
+        assert [tuple(r) for r in df.collect()] == [
+            tuple(r) for r in spark.createDataFrame(rows, schema).collect()
+        ]
