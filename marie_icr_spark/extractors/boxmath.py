@@ -16,8 +16,7 @@ reference engine:
 * block envelope (min x/y, max extents)
                         — ``marie/utils/overlap.py:186-204``
 
-All boxes are ``[x, y, w, h]`` int arrays (XYWH). XYXY conversion mirrors
-``marie/ocr/coordinate_format.py:23-55``.
+All boxes are ``[x, y, w, h]`` int arrays (XYWH).
 """
 
 from __future__ import annotations
@@ -34,24 +33,6 @@ IOU_LADDER = (0.8, 0.7, 0.6, 0.5, 0.4, 0.37, 0.35)
 # followed by merges at 0.5 still breaks after the next no-change step;
 # that quirk is part of the pinned contract.
 STABLE_ROUNDS = 2
-
-
-def xywh_to_xyxy(boxes: np.ndarray) -> np.ndarray:
-    """[x,y,w,h] -> [x0,y0,x1,y1] (coordinate_format.py:23-38)."""
-    boxes = np.asarray(boxes).reshape(-1, 4)
-    out = boxes.copy()
-    out[:, 2] = boxes[:, 0] + boxes[:, 2]
-    out[:, 3] = boxes[:, 1] + boxes[:, 3]
-    return out
-
-
-def xyxy_to_xywh(boxes: np.ndarray) -> np.ndarray:
-    """[x0,y0,x1,y1] -> [x,y,w,h] (coordinate_format.py:41-55)."""
-    boxes = np.asarray(boxes).reshape(-1, 4)
-    out = boxes.copy()
-    out[:, 2] = boxes[:, 2] - boxes[:, 0]
-    out[:, 3] = boxes[:, 3] - boxes[:, 1]
-    return out
 
 
 def envelope(boxes: np.ndarray) -> list[int]:
@@ -169,7 +150,7 @@ def _drop_contained(boxes: np.ndarray) -> np.ndarray:
     return b[keep]
 
 
-def fast_band_lines(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
+def fast_band_lines(boxes: list[list[int]]) -> tuple[list, list[int]] | None:
     """Fast path for clean band-structured layouts.
 
     When the y-intervals decompose into components where (a) every pair in a
@@ -182,93 +163,11 @@ def fast_band_lines(boxes: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
     identical-box fallback (line_processor.py:32-44) replicated for words
     whose box equals their line box — or ``None`` when the preconditions
     fail (caller falls back to the general ladder).
-    """
-    b = np.asarray(boxes, dtype=np.int64).reshape(-1, 4)
-    n = len(b)
-    if n == 0:
-        return None
-    if (b[:, 3] <= 0).any():
-        return None
-    # duplicates break the ladder's identical-box exclusion semantics
-    if len(np.unique(b, axis=0)) != n:
-        return None
 
-    order = np.argsort(b[:, 1], kind="stable")
-    sb = b[order]
-    y0 = sb[:, 1]
-    y1 = y0 + sb[:, 3]
-
-    comp = np.empty(n, dtype=np.int64)
-    comp[0] = 0
-    run_max = y1[0]
-    c = 0
-    for i in range(1, n):
-        if y0[i] < run_max:
-            comp[i] = c
-            if y1[i] > run_max:
-                run_max = y1[i]
-        else:
-            c += 1
-            comp[i] = c
-            run_max = y1[i]
-    n_comp = c + 1
-
-    big = np.int64(1) << 60
-    min_y0 = np.full(n_comp, big)
-    max_y0 = np.full(n_comp, -big)
-    min_y1 = np.full(n_comp, big)
-    max_y1 = np.full(n_comp, -big)
-    max_h = np.full(n_comp, -big)
-    min_x = np.full(n_comp, big)
-    max_x1 = np.full(n_comp, -big)
-    np.minimum.at(min_y0, comp, y0)
-    np.maximum.at(max_y0, comp, y0)
-    np.minimum.at(min_y1, comp, y1)
-    np.maximum.at(max_y1, comp, y1)
-    np.maximum.at(max_h, comp, sb[:, 3])
-    np.minimum.at(min_x, comp, sb[:, 0])
-    np.maximum.at(max_x1, comp, sb[:, 0] + sb[:, 2])
-
-    sizes = np.bincount(comp, minlength=n_comp)
-    multi = sizes > 1
-    if multi.any():
-        inter_lb = (min_y1 - max_y0)[multi].astype(np.float64)
-        if (inter_lb <= 0).any():
-            return None
-        union_ub = 2 * max_h[multi] - inter_lb
-        if (inter_lb / union_ub < IOU_LADDER[0]).any():
-            return None
-
-    env_end = min_y0 + max_h
-    span_end = np.maximum(env_end, max_y1)
-    if n_comp > 1 and (min_y0[1:] < span_end[:-1]).any():
-        return None
-
-    lines = np.column_stack([min_x, min_y0, max_x1 - min_x, max_h])
-
-    # per-word line number: own component, except the reference's
-    # identical-box exclusion → nearest line-bottom fallback
-    line_no_sorted = comp + 1
-    same = (sb == lines[comp]).all(axis=1)
-    if same.any():
-        bottoms = lines[:, 1] + lines[:, 3]
-        for i in np.nonzero(same)[0]:
-            cy = sb[i, 1] + sb[i, 3] // 2
-            line_no_sorted[i] = int(np.argmin(np.abs(cy - bottoms))) + 1
-
-    line_no = np.empty(n, dtype=np.int64)
-    line_no[order] = line_no_sorted
-    return lines, line_no
-
-
-def fast_band_lines_py(boxes: list[list[int]]) -> tuple[list, list[int]] | None:
-    """Pure-Python twin of :func:`fast_band_lines` for small word counts.
-
-    Semantics are identical (same preconditions, same identical-box
-    fallback); for the typical 10-100-word payload the per-call numpy
-    dispatch overhead dominates the actual work, so plain loops are ~5×
-    faster. Returns (line_boxes, line_no) or None for the numpy/general
-    fallback.
+    Plain loops over the box lists (one stable y-sort, one linear scan): a
+    numpy body pays per-call dispatch that dominates at typical page sizes,
+    and it measured no faster from 513 up to 50,000 boxes (one thread on a
+    Xeon vCPU).
 
     Precondition: every box has exactly 4 elements (x, y, w, h). The
     duplicate probe ``set(map(tuple, boxes))`` hashes whole rows, so a
@@ -391,64 +290,6 @@ def cluster_lines(boxes) -> np.ndarray:
 
     b = _drop_contained(b)
     return b[np.argsort(b[:, 1], kind="stable")]
-
-
-def _merge_pass_horizontal(b: np.ndarray, band: float) -> np.ndarray:
-    """One horizontal-merge sweep (twin of the loop body of ``merge_boxes``,
-    overlap.py:288-317): visit boxes in order; each unvisited box absorbs
-    every horizontally-overlapping box whose vertical center lies within
-    ``band``·h of its own center (``find_overlap_horizontal`` with
-    ``center_y_overlap``, overlap.py:106-183); group envelope = extent."""
-    n = len(b)
-    x0, x1 = b[:, 0], b[:, 0] + b[:, 2]
-    y, h = b[:, 1], b[:, 3]
-    cy = y + h // 2
-    lo = cy - (h * band)
-    hi = cy + (h * band)
-
-    x_over = (x0[:, None] < x1[None, :]) & (x0[None, :] < x1[:, None])
-    in_band = (cy[None, :] >= lo[:, None]) & (cy[None, :] <= hi[:, None])
-    same = (b[:, None, :] == b[None, :, :]).all(axis=-1)
-    mask = x_over & in_band & ~same
-
-    visited = np.zeros(n, dtype=bool)
-    groups = []
-    for i in range(n):
-        if visited[i]:
-            continue
-        visited[i] = True
-        members = [i]
-        for j in np.nonzero(mask[i])[0]:
-            # reference marks overlaps visited unconditionally (:302-305)
-            if not visited[j]:
-                members.append(j)
-            visited[j] = True
-        groups.append(envelope(b[members].tolist()))
-    return np.asarray(groups, dtype=np.int64).reshape(-1, 4)
-
-
-def merge_boxes_horizontal(
-    boxes_xyxy, band: float = 0.5, max_rounds: int = 3
-) -> np.ndarray:
-    """Merge horizontally-adjacent boxes sharing a vertical center band.
-
-    Twin of ``merge_boxes`` (overlap.py:268-330): input/output XYXY, up to
-    ``max_rounds`` sweeps, stop when a sweep produces no reduction.
-    """
-    b = np.asarray(boxes_xyxy, dtype=np.int64).reshape(-1, 4)
-    if len(b) == 0:
-        return b
-    cur = xyxy_to_xywh(b)
-    for _ in range(max_rounds):
-        merged = _merge_pass_horizontal(cur, band)
-        # counts are monotonically non-increasing (each sweep emits one
-        # envelope per group), so no-reduction == fixpoint; an A→B→A
-        # oscillation guard is unnecessary
-        if len(merged) == len(cur):
-            cur = merged
-            break
-        cur = merged
-    return xywh_to_xyxy(cur)
 
 
 def assign_lines(word_boxes: np.ndarray, line_boxes: np.ndarray) -> np.ndarray:

@@ -35,8 +35,6 @@ from .layout import (
 from .markdown import extract_markdown, looks_like_markdown
 from .textnorm import normalize_plain, span_count
 
-PAYLOAD_KINDS = ("layout", "html", "markdown", "plain", "empty")
-
 
 @dataclass
 class TurnExtraction:
@@ -65,10 +63,6 @@ def _sniff(text: str) -> tuple[str, tuple[list, list] | None]:
     if looks_like_markdown(text):
         return "markdown", None
     return "plain", None
-
-
-def sniff_payload_kind(text: str) -> str:
-    return _sniff(text)[0]
 
 
 def extract_turn_arrow(

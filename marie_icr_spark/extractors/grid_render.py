@@ -18,7 +18,6 @@ import numpy as np
 
 CHAR_WIDTH = 8.44
 CHAR_HEIGHT = 16
-CHAR_RATIO = 2.75
 
 
 def render_grid_text(

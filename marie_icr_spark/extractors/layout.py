@@ -38,7 +38,6 @@ from .boxmath import (
     cluster_lines,
     envelope,
     fast_band_lines,
-    fast_band_lines_py,
 )
 from .textnorm import join_lines, join_words
 
@@ -139,17 +138,11 @@ def _line_numbers(boxes_list: list[list[int]], mode: str) -> list[int]:
         uniq = sorted({b[1] for b in boxes_list})
         rank = {y: i + 1 for i, y in enumerate(uniq)}
         return [rank[b[1]] for b in boxes_list]
-    # sparse: band fast path (pure Python for small n, numpy above — the
-    # twins share preconditions, so a small-n miss goes STRAIGHT to the
-    # general ladder) → IoU-ladder clustering
-    if n <= 512:
-        fast = fast_band_lines_py(boxes_list)
-        if fast is not None:
-            return fast[1]
-    else:
-        fastnp = fast_band_lines(np.asarray(boxes_list, dtype=np.int64))
-        if fastnp is not None:
-            return [int(v) for v in fastnp[1]]
+    # sparse: band fast path for tidy pages; a miss (any overlap it can't
+    # prove, duplicates, zero heights) takes the general IoU ladder
+    fast = fast_band_lines(boxes_list)
+    if fast is not None:
+        return fast[1]
     boxes = np.asarray(boxes_list, dtype=np.int64)
     line_boxes = cluster_lines(boxes)
     return [int(v) for v in assign_lines(boxes, line_boxes)]

@@ -93,19 +93,6 @@ def segment_conversations(
     )
 
 
-def ordered_turns(extracted: DataFrame) -> DataFrame:
-    """Stable turn ordering view: adds ``turn_rank`` (1..N per conversation).
-
-    The window form of the north rule's stable-ordering guarantee
-    (Window.partitionBy(conv_id).orderBy(turn_idx); SURVEY.md §2.5 W6) for
-    consumers that need per-turn rows rather than the concatenated text.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return extracted.withColumn("turn_rank", F.row_number().over(w))
-
-
 def dedup_quoted_context(
     extracted: DataFrame, text_col: str = "extracted_text"
 ) -> DataFrame:

@@ -3,50 +3,38 @@
 The reference loads page images as ndarray frames
 (``marie/utils/docs.py:372-380``) and pushes them through GPU operators. At
 100 TB the Spark-side contract is: media stays an opaque ``binary`` column
-with typed metadata; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages.
+with typed metadata; pixel stats / per-page stats / resize run as
+Arrow-batched ``mapInPandas`` stages (``media_pixel_stats``,
+``tiff_page_stats``, ``resize_media``).
 
-Decode dispatches on container magic. REAL pure-stdlib decoders cover:
+Pixel decode dispatches on container magic (``_rgb_image``). REAL
+pure-stdlib decoders cover:
 
-* PPM (P6)  — full header + raw pixel access (``media_pixel_stats``)
-* PNG       — IHDR dimensions; PLUS full pixel decode for 8-bit
-              non-interlaced gray/RGB/RGBA (stdlib zlib inflate + spec
-              unfiltering, ``decode_png_pixels``) feeding the same
-              ``media_pixel_stats``
-* BMP       — BITMAPINFOHEADER dimensions
-* JPEG      — SOF0/1/2 frame dimensions (marker scan); PLUS full
-              baseline pixel decode (``decode_jpeg_pixels``: Huffman →
-              dequant → orthonormal IDCT → chroma upsample → YCbCr→RGB;
+* PPM (P6)  — full header + raw pixel access
+* PNG       — full pixel decode for 8-bit non-interlaced gray/RGB/RGBA
+              (stdlib zlib inflate + spec unfiltering,
+              ``decode_png_pixels``)
+* JPEG      — full baseline pixel decode (``decode_jpeg_pixels``: Huffman
+              → dequant → orthonormal IDCT → chroma upsample → YCbCr→RGB;
               SOF0/SOF1, any standard sampling, restart intervals)
-* WAV       — channels / sample rate / frame count via stdlib ``wave``
-              (mapped as width=n_channels, height=sample_rate)
-* TIFF      — multi-page IFD walk (dims + page count for ``decode_media``)
-              PLUS full pixel decode for baseline strips: uncompressed,
+* TIFF      — full pixel decode for baseline strips: uncompressed,
               PackBits, and CCITT Group-4 bilevel (``operators.tiffio``,
               the reference's archival scan format —
               marie/utils/docs.py:372-380, extract_pipeline.py:594-604)
 
-Video codecs would need ffmpeg, which is not in this container — those,
-and unknown magics, raise ``NotImplementedError`` and fail open as
-(ok=False, error) rows; PNG variants outside the supported set (16-bit,
-palette, Adam7) and JPEG variants outside baseline (progressive,
-arithmetic, 16-bit quant) fail open the same way in the pixel path while
-still decoding dimensions.
-
-Fake header format (tests): b"FAKE" + kind(1B: I/A/V) + width(4B LE) +
-height(4B LE) + nframes(4B LE) + payload.
+Every other container (video codecs would need ffmpeg), PNG variants
+outside the supported set (16-bit, palette, Adam7) and JPEG variants
+outside baseline (progressive, arithmetic, 16-bit quant) fail open as
+ok=False rows.
 """
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ASSET_SCHEMA = T.StructType(
@@ -57,51 +45,6 @@ ASSET_SCHEMA = T.StructType(
         T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
     ]
 )
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("payload_bytes", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
-_MAGIC = b"FAKE"
-_HEADER_FMT = "<cIII"  # kind, width, height, n_frames (struct.Struct itself
-_HEADER_SIZE = struct.calcsize(_HEADER_FMT)  # is not picklable → keep fmt str)
-
-
-def encode_fake_media(kind: str, width: int, height: int, n_frames: int,
-                      payload: bytes = b"") -> bytes:
-    """Test-fixture encoder for the deterministic fake container."""
-    return (
-        _MAGIC
-        + struct.pack(_HEADER_FMT, kind[:1].encode(), width, height, n_frames)
-        + payload
-    )
-
-
-def _ok(w: int, h: int, n: int, payload: int) -> dict:
-    return {"ok": True, "error": "", "width": int(w), "height": int(h),
-            "n_frames": int(n), "payload_bytes": int(payload)}
-
-
-def _bad(err: str) -> dict:
-    return {"ok": False, "error": err, "width": 0, "height": 0,
-            "n_frames": 0, "payload_bytes": 0}
 
 
 def parse_ppm_header(content: bytes) -> tuple[int, int, int, int] | None:
@@ -130,219 +73,6 @@ def parse_ppm_header(content: bytes) -> tuple[int, int, int, int] | None:
     if len(fields) < 3 or i >= n or not content[i : i + 1].isspace():
         return None
     return fields[0], fields[1], fields[2], i + 1
-
-
-def _decode_ppm(content: bytes) -> dict:
-    hdr = parse_ppm_header(content)
-    if hdr is None:
-        return _bad("malformed ppm")
-    w, h, maxval, off = hdr
-    if maxval > 255:
-        # legal PPM, but 2 bytes/sample — reading it 1-byte would emit
-        # garbage pixels as ok=True; fail open like other unsupported
-        # container variants
-        return _bad("unsupported ppm maxval > 255")
-    need = w * h * 3
-    if len(content) - off < need:
-        return _bad("truncated ppm")
-    return _ok(w, h, 1, need)
-
-
-def _decode_bmp(content: bytes) -> dict:
-    if len(content) < 26:
-        return _bad("truncated bmp")
-    hdr_size = struct.unpack_from("<I", content, 14)[0]
-    if hdr_size >= 40:
-        w, h = struct.unpack_from("<ii", content, 18)
-    else:  # BITMAPCOREHEADER
-        w, h = struct.unpack_from("<hh", content, 18)
-    # height<0 is legal (top-down rows) but width must be positive — a
-    # negative/zero width is hostile input, not a layout variant
-    if w <= 0 or h == 0:
-        return _bad("bad bmp dims")
-    data_off = struct.unpack_from("<I", content, 10)[0]
-    return _ok(w, abs(h), 1, max(len(content) - data_off, 0))
-
-
-def _decode_png(content: bytes) -> dict:
-    if len(content) < 24 or content[12:16] != b"IHDR":
-        return _bad("truncated png")
-    w, h = struct.unpack_from(">II", content, 16)
-    return _ok(w, h, 1, len(content) - 8)
-
-
-def _decode_jpeg(content: bytes) -> dict:
-    i, n = 2, len(content)
-    while i + 9 < n:
-        if content[i] != 0xFF:
-            return _bad("malformed jpeg")
-        # skip 0xFF fill bytes between segments (legal padding) — same
-        # rule as the pixel decoder's marker walk, so decode_media and
-        # media_pixel_stats agree on every asset
-        while i + 9 < n and content[i + 1] == 0xFF:
-            i += 1
-        marker = content[i + 1]
-        if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
-            h, w = struct.unpack_from(">HH", content, i + 5)
-            return _ok(w, h, 1, n)
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        seg = struct.unpack_from(">H", content, i + 2)[0]
-        i += 2 + seg
-    return _bad("no jpeg SOF marker")
-
-
-def _decode_tiff(content: bytes) -> dict:
-    """Multi-page TIFF: first-page dimensions, n_frames = page count.
-
-    Container walk only (no pixel decode) — the same dims-first contract as
-    the JPEG/PNG branches; pixel access goes through
-    :func:`tiff_page_stats` / :func:`_rgb_image`."""
-    from . import tiffio
-
-    try:
-        pages = tiffio.tiff_page_info(content)
-    except ValueError as e:
-        return _bad(f"malformed tiff: {e}")
-    if not pages:
-        return _bad("tiff: no pages")
-    first = pages[0]
-    w = first.get(256, [0])[0]
-    h = first.get(257, [0])[0]
-    payload = sum(
-        sum(p.get(279, [])) for p in pages
-    )  # strip bytes across all pages
-    return _ok(w, h, len(pages), payload)
-
-
-def _decode_wav(content: bytes) -> dict:
-    try:
-        with wave.open(io.BytesIO(bytes(content))) as wv:
-            # audio mapping: width = channels, height = sample rate
-            return _ok(
-                wv.getnchannels(), wv.getframerate(), wv.getnframes(),
-                wv.getnframes() * wv.getnchannels() * wv.getsampwidth(),
-            )
-    except (wave.Error, EOFError):
-        return _bad("malformed wav")
-
-
-def _decode_one(content: bytes) -> dict:
-    if content is None or len(content) < 8:
-        return _bad("truncated")
-    head = bytes(content[:12])
-    if head[: len(_MAGIC)] == _MAGIC:
-        if len(content) < len(_MAGIC) + _HEADER_SIZE:
-            return _bad("truncated")
-        kind, w, h, n = struct.unpack_from(_HEADER_FMT, content, len(_MAGIC))
-        return _ok(w, h, n, len(content) - len(_MAGIC) - _HEADER_SIZE)
-    if head[:2] == b"P6":
-        return _decode_ppm(bytes(content))
-    if head[:2] == b"BM":
-        return _decode_bmp(bytes(content))
-    if head[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(bytes(content))
-    if head[:3] == b"\xff\xd8\xff":
-        return _decode_jpeg(bytes(content))
-    if head[:4] == b"RIFF" and head[8:12] == b"WAVE":
-        return _decode_wav(content)
-    if head[:4] in (b"II*\x00", b"MM\x00*"):
-        return _decode_tiff(bytes(content))
-    # compressed-codec pixel decode / unknown containers need PIL/ffmpeg,
-    # which this container does not ship
-    raise NotImplementedError(
-        f"no decoder for container magic {head[:4]!r}"
-    )
-
-
-def decode_media(df: DataFrame, fail_open: bool = True) -> DataFrame:
-    """Arrow-batched decode of the binary column → typed dimensions.
-
-    ``fail_open=True`` converts codec errors into (ok=False, error) rows —
-    the reference's overlay fail-open contract
-    (marie/pipe/extract_pipeline.py:143-154) — instead of failing the task.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mt, content in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["content"]
-            ):
-                try:
-                    d = _decode_one(content)
-                except NotImplementedError as e:
-                    if not fail_open:
-                        raise
-                    d = {"ok": False, "error": str(e), "width": 0,
-                         "height": 0, "n_frames": 0, "payload_bytes": 0}
-                d.update(asset_id=aid, media_type=mt)
-                rows.append(d)
-            out = pd.DataFrame(rows)
-            yield out[
-                ["asset_id", "media_type", "width", "height", "n_frames",
-                 "payload_bytes", "ok", "error"]
-            ]
-
-    return df.select("asset_id", "media_type", "content").mapInPandas(
-        run, schema=DECODED_SCHEMA
-    )
-
-
-def sample_frames(df: DataFrame, every_nth: int = 2) -> DataFrame:
-    """Frame sampling: explode each fake-video asset into every-nth frame.
-
-    Frames of the fake container are equal slices of the payload. One input
-    row → ceil(n_frames / every_nth) output rows (mapInPandas is the right
-    shape: the fan-out is data-dependent).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                # equal-slice framing is a property of the FAKE container
-                # only; real containers (WAV etc.) decode dimensions but
-                # have no sliceable frame layout here
-                if content is None or bytes(content[: len(_MAGIC)]) != _MAGIC:
-                    continue
-                try:
-                    d = _decode_one(content)
-                except NotImplementedError:
-                    continue
-                if not d["ok"] or d["n_frames"] <= 0:
-                    continue
-                payload = bytes(content)[len(_MAGIC) + _HEADER_SIZE :]
-                n = d["n_frames"]
-                size = max(1, len(payload) // n) if payload else 0
-                for i in range(0, n, every_nth):
-                    ids.append(aid)
-                    idxs.append(i)
-                    blobs.append(payload[i * size : (i + 1) * size])
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": blobs,
-                }
-            )
-
-    return df.select("asset_id", "content").mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def media_features(decoded: DataFrame) -> DataFrame:
-    """Cheap JVM-side feature columns over decoded metadata (no Python)."""
-    return decoded.select(
-        "asset_id",
-        "media_type",
-        (F.col("width") * F.col("height")).cast("long").alias("pixels"),
-        F.when(F.col("height") > 0, F.col("width") / F.col("height"))
-        .otherwise(F.lit(0.0))
-        .alias("aspect_ratio"),
-        F.col("payload_bytes"),
-        F.col("ok"),
-    )
 
 
 PIXEL_STATS_SCHEMA = T.StructType(
@@ -531,13 +261,6 @@ def label_components_4(img) -> int:
             cur.append((s, e, lbl))
         prev = cur
     return sum(1 for i, p in enumerate(parent) if find(i) == i)
-
-
-def estimate_char_width(img, total_box_width: int) -> int:
-    """``total_box_width // n_components`` with the reference's hardcoded
-    fallback of 8 when the raster is blank (box_processor.py:119-123)."""
-    n = label_components_4(img)
-    return 8 if n == 0 else int(total_box_width) // n
 
 
 def encode_ppm(width: int, height: int, pixels: bytes) -> bytes:
@@ -735,18 +458,6 @@ def _rgb_pixels(content: bytes):
     return None if img is None else img.reshape(-1, 3)
 
 
-def encode_wav(n_channels: int, framerate: int, frames: bytes,
-               sampwidth: int = 2) -> bytes:
-    """Test-fixture encoder: PCM WAV via stdlib wave."""
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as wv:
-        wv.setnchannels(n_channels)
-        wv.setsampwidth(sampwidth)
-        wv.setframerate(framerate)
-        wv.writeframes(frames)
-    return bio.getvalue()
-
-
 RESIZED_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.StringType()),
@@ -810,7 +521,8 @@ def resize_media(
     oracle recomputes the mapped coordinates in DuckDB). The resample is
     two numpy index gathers inside Arrow-batched mapInPandas; assets whose
     pixels can't be decoded (compressed codecs without a stdlib path) pass
-    through unchanged with ok=False — the decode_media fail-open contract.
+    through unchanged with ok=False — the same fail-open contract as
+    :func:`media_pixel_stats`.
 
     Output: (asset_id, media_type, ok, width, height, content).
     """
@@ -854,10 +566,10 @@ def resize_media(
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG pixel decode (pure stdlib+numpy; closes the dims-only JPEG
-# caveat). Scope: baseline/extended-sequential Huffman (SOF0/SOF1), 8-bit
-# samples, interleaved single scan, grayscale or YCbCr with any standard
-# sampling (4:4:4 / 4:2:2 / 4:2:0), restart intervals. Progressive (SOF2),
+# Baseline JPEG pixel decode (pure stdlib+numpy). Scope:
+# baseline/extended-sequential Huffman (SOF0/SOF1), 8-bit samples,
+# interleaved single scan, grayscale or YCbCr with any standard sampling
+# (4:4:4 / 4:2:2 / 4:2:0), restart intervals. Progressive (SOF2),
 # arithmetic coding, 16-bit quant tables and hierarchical streams return
 # None — the documented fail-open path (the reference delegates this to
 # PIL, marie/utils/docs.py:372-380; at cluster scale a native codec slots

@@ -227,16 +227,6 @@ def ann_batch_topk(
     )
 
 
-def lsh_topk(emb: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
-    """Single-query ANN top-k — thin wrapper over :func:`ann_batch_topk`.
-    Output: (vec_id, cosine)."""
-    return (
-        ann_batch_topk(emb, query, k=k)
-        .select("vec_id", "cosine")
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the coarse-quantizer alternative to the LSH
 # tables. Deterministic integer arithmetic end-to-end so the whole fit /

@@ -2262,8 +2262,9 @@ EXT_ORACLES["dedup_survivors"] = ORACLE_DEDUP_SURVIVORS
 # ---------------------------------------------------------------------------
 # Structured-Streaming oracles: transcripts land as a file stream and run
 # through the REAL streaming pipeline (availableNow) inside the query; the
-# results are deterministic (ts = EPOCH + doc_id seconds), so the windowed
-# aggregation and the stateful per-conversation totals both replay in SQL.
+# results are deterministic (ts = EPOCH_UNIX + doc_id seconds), so the
+# windowed aggregation and the stateful per-conversation totals both replay
+# in SQL.
 # ---------------------------------------------------------------------------
 
 from .sources.transcripts import WORDS_PER_LINE  # noqa: E402

@@ -18,9 +18,6 @@ TABLES = (
     "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")

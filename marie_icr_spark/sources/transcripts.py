@@ -36,10 +36,9 @@ from .tables import load_table
 
 WORDS_PER_LINE = 8
 CONV_MOD = 89  # documents → conversations: conv = doc_id % 89
-EPOCH = "2025-01-01 00:00:00"
-# unix seconds of EPOCH **as UTC**, pinned as an integer so ts derivation
-# never depends on the session timezone (unix_timestamp parses string
-# literals in session-local time — a silent env dependency otherwise)
+# unix seconds of 2025-01-01 00:00:00 **as UTC**, pinned as an integer so
+# ts derivation never depends on the session timezone (unix_timestamp parses
+# string literals in session-local time — a silent env dependency otherwise)
 EPOCH_UNIX = 1_735_689_600
 
 TRANSCRIPT_SCHEMA = T.StructType(

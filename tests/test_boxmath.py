@@ -8,16 +8,9 @@ from marie_icr_spark.extractors.boxmath import (
     assign_lines,
     cluster_lines,
     envelope,
+    fast_band_lines,
     vertical_iou_matrix,
-    xywh_to_xyxy,
-    xyxy_to_xywh,
 )
-
-
-def test_coordinate_roundtrip():
-    boxes = np.array([[10, 20, 30, 40], [0, 0, 5, 5]])
-    assert (xyxy_to_xywh(xywh_to_xyxy(boxes)) == boxes).all()
-    assert (xywh_to_xyxy(boxes)[0] == [10, 20, 40, 60]).all()
 
 
 def test_envelope_extent():
@@ -107,10 +100,37 @@ def test_cluster_is_deterministic_on_random_boxes():
     assert (out >= 1).all() and (out <= len(a)).all()
 
 
-def test_fast_band_path_equivalent_to_ladder():
-    """fast_band_lines must agree with the general ladder whenever it fires."""
-    from marie_icr_spark.extractors.boxmath import fast_band_lines
+def _ladder_agrees(boxes: list[list[int]]) -> bool:
+    """True when ``fast_band_lines`` fires on ``boxes``; then its line boxes
+    and line numbers must equal the general ladder's."""
+    fast = fast_band_lines(boxes)
+    if fast is None:
+        return False
+    flines, fno = fast
+    arr = np.array(boxes, dtype=np.int64).reshape(-1, 4)
+    glines = cluster_lines(arr)
+    assert np.array_equal(np.array(flines).reshape(-1, 4), glines)
+    assert fno == assign_lines(arr, glines).tolist()
+    return True
 
+
+def _band_page(rng, nlines, max_words):
+    """Tidy page: rows 18-39 px apart, 16 px tall with 0/1 px y jitter,
+    1..max_words words each, shuffled."""
+    boxes, y = [], 0
+    for _ in range(nlines):
+        y += rng.randint(18, 40)
+        x = 0
+        for _ in range(rng.randint(1, max_words + 1)):
+            w = rng.randint(9, 80)
+            boxes.append([x, y + rng.randint(0, 2), w, 16])
+            x += w + rng.randint(5, 20)
+    return [boxes[i] for i in rng.permutation(len(boxes))]
+
+
+def test_fast_band_path_equivalent_to_ladder():
+    """fast_band_lines must agree with the general ladder whenever it fires,
+    on small pages and on pages past 512 boxes alike."""
     rng = np.random.RandomState(99)
     fired = 0
     for trial in range(300):
@@ -124,29 +144,25 @@ def test_fast_band_path_equivalent_to_ladder():
                 w = rng.randint(9, 80)
                 boxes.append([x, y, w, h])
                 x += w + rng.randint(5, 20)
-        boxes = np.array(boxes)
-        boxes = boxes[rng.permutation(len(boxes))]
-        fast = fast_band_lines(boxes)
-        if fast is None:
-            continue
-        fired += 1
-        flines, fno = fast
-        glines = cluster_lines(boxes)
-        gno = assign_lines(boxes, glines)
-        assert (flines == glines).all(), (trial, flines, glines)
-        assert (fno == gno).all(), (trial, fno.tolist(), gno.tolist())
+        boxes = [boxes[i] for i in rng.permutation(len(boxes))]
+        fired += _ladder_agrees(boxes)
     assert fired > 150, f"fast path almost never fires ({fired}/300)"
+    sizes = []
+    for nlines in (130, 200, 320):
+        page = _band_page(rng, nlines, 8)
+        sizes.append(len(page))
+        assert _ladder_agrees(page), len(page)
+    assert min(sizes) > 512, sizes
 
 
 def test_fast_band_path_rejects_messy():
-    from marie_icr_spark.extractors.boxmath import fast_band_lines
-
     # jittered overlapping bands → must fall back (conservative bound)
-    jitter = np.array([[0, 0, 50, 16], [60, 10, 50, 16]])
-    assert fast_band_lines(jitter) is None
+    assert fast_band_lines([[0, 0, 50, 16], [60, 10, 50, 16]]) is None
     # duplicates → must fall back
-    dup = np.array([[0, 0, 50, 16], [0, 0, 50, 16]])
-    assert fast_band_lines(dup) is None
+    assert fast_band_lines([[0, 0, 50, 16], [0, 0, 50, 16]]) is None
     # zero-height → must fall back
-    zh = np.array([[0, 0, 50, 0], [0, 40, 50, 16]])
-    assert fast_band_lines(zh) is None
+    assert fast_band_lines([[0, 0, 50, 0], [0, 40, 50, 16]]) is None
+    # past 512 boxes: one duplicate in a tidy page still falls back
+    page = _band_page(np.random.RandomState(7), 200, 8)
+    assert len(page) > 512 and fast_band_lines(page) is not None
+    assert fast_band_lines(page + [list(page[0])]) is None

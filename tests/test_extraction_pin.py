@@ -4,7 +4,7 @@
 canonical JSON of ``extract_turn_arrow(p, mode)`` for every payload of a
 fixed corpus: the ``synth_transcripts(seed=42)`` payloads, seeded layout
 pages of 0, 1, 5, 40 and 600 words (some with degenerate boxes; the
-600-word pages take the numpy band path and the IoU ladder) and the
+600-word pages take the band fast path and the IoU ladder) and the
 oversized-coordinate payloads. A refactor of the extractors must leave
 every hash unchanged.
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from marie_icr_spark.extractors.textnorm import TURN_JOIN
-from marie_icr_spark.operators.assembly import assemble_conversations, ordered_turns
+from marie_icr_spark.operators.assembly import assemble_conversations
 from marie_icr_spark.operators.extraction import extract_turns, salt_repartition
 from marie_icr_spark.sources.transcripts import TRANSCRIPT_SCHEMA, synth_transcripts
 
@@ -89,14 +89,6 @@ def test_assembly_matches_pandas_golden(spark, synth):
     # hot conversation 0 is intact despite bucketed two-phase aggregation
     hot = merged[merged["conv_id"] == "conv-00000000"].iloc[0]
     assert hot["turn_count"] == (gdf["conv_id"] == "conv-00000000").sum()
-
-
-def test_ordered_turns_rank(spark, synth):
-    sdf, tdf, gdf = synth
-    out = ordered_turns(extract_turns(sdf)).toPandas()
-    grp = out.sort_values(["conv_id", "turn_idx"]).groupby("conv_id")
-    for _, g in grp:
-        assert g["turn_rank"].tolist() == list(range(1, len(g) + 1))
 
 
 def test_extraction_plan_is_shuffle_free(spark, synth):

@@ -2,7 +2,7 @@
 
 import json
 
-from marie_icr_spark.extractors.core import extract_turn, sniff_payload_kind
+from marie_icr_spark.extractors.core import extract_turn
 from marie_icr_spark.extractors.html import extract_html
 from marie_icr_spark.extractors.layout import parse_layout_payload
 from marie_icr_spark.extractors.markdown import extract_markdown
@@ -12,17 +12,20 @@ from marie_icr_spark.extractors.textnorm import normalize_plain, span_count
 # ---------- sniffing ----------
 
 def test_sniff_kinds():
-    assert sniff_payload_kind("") == "empty"
-    assert sniff_payload_kind("  \n\t ") == "empty"
-    assert sniff_payload_kind('[{"text":"a","box":[0,0,5,5]}]') == "layout"
-    assert sniff_payload_kind("<p>hello</p>") == "html"
-    assert sniff_payload_kind("# title\n\nbody") == "markdown"
-    assert sniff_payload_kind("```\nx\n```") == "markdown"
-    assert sniff_payload_kind("just some words") == "plain"
+    def kind(text):
+        return extract_turn(text).payload_kind
+
+    assert kind("") == "empty"
+    assert kind("  \n\t ") == "empty"
+    assert kind('[{"text":"a","box":[0,0,5,5]}]') == "layout"
+    assert kind("<p>hello</p>") == "html"
+    assert kind("# title\n\nbody") == "markdown"
+    assert kind("```\nx\n```") == "markdown"
+    assert kind("just some words") == "plain"
     # JSON that is not layout-shaped falls through to plain
-    assert sniff_payload_kind('{"a": 1}') == "plain"
+    assert kind('{"a": 1}') == "plain"
     # math like 3 < 5 is not html
-    assert sniff_payload_kind("3 < 5 and 7 > 2") == "plain"
+    assert kind("3 < 5 and 7 > 2") == "plain"
 
 
 # ---------- plain ----------

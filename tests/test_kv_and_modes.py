@@ -1,11 +1,9 @@
-"""PSM modes, horizontal merge, grid rendering, entity spans, KV pairing."""
+"""PSM modes, grid rendering, entity spans, KV pairing."""
 
 import json
 
-import numpy as np
 import pytest
 
-from marie_icr_spark.extractors.boxmath import merge_boxes_horizontal
 from marie_icr_spark.extractors.core import extract_turn
 from marie_icr_spark.extractors.grid_render import render_grid_text
 from marie_icr_spark.operators.kv import (
@@ -58,27 +56,6 @@ def test_mode_unknown_falls_back_to_sparse():
     assert extract_turn(PAYLOAD, mode="bogus").extracted_text == (
         "alpha bravo\ncharlie delta"
     )
-
-
-# ---------- merge_boxes_horizontal (B5) ----------
-
-def test_merge_boxes_horizontal_band():
-    # two overlapping boxes on one band + one far below
-    boxes = [[0, 0, 50, 16], [40, 2, 90, 18], [0, 100, 50, 116]]
-    merged = merge_boxes_horizontal(boxes)
-    assert len(merged) == 2
-    assert merged.tolist()[0] == [0, 0, 90, 18]
-
-
-def test_merge_boxes_horizontal_respects_center_band():
-    # x-overlap but vertical centers far apart → no merge
-    boxes = [[0, 0, 50, 16], [10, 40, 60, 56]]
-    assert len(merge_boxes_horizontal(boxes)) == 2
-
-
-def test_merge_boxes_horizontal_rounds_cap():
-    out = merge_boxes_horizontal([[i * 10, 0, i * 10 + 15, 16] for i in range(6)])
-    assert len(out) >= 1  # chain merge converges within 3 rounds
 
 
 # ---------- grid renderer (W8) ----------

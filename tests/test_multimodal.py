@@ -4,83 +4,23 @@ import pytest
 
 from marie_icr_spark.operators.multimodal import (
     ASSET_SCHEMA,
-    decode_media,
-    encode_fake_media,
     encode_ppm,
-    encode_wav,
-    media_features,
     media_pixel_stats,
-    sample_frames,
 )
-
-
-@pytest.fixture(scope="module")
-def assets(spark):
-    rows = [
-        ("img-1", "image", encode_fake_media("I", 640, 480, 1, b"x" * 100), {"src": "a"}),
-        ("img-2", "image", encode_fake_media("I", 100, 200, 1, b"y" * 10), {}),
-        ("vid-1", "video", encode_fake_media("V", 1920, 1080, 10, b"f" * 100), {}),
-        ("aud-1", "audio", encode_fake_media("A", 0, 0, 5, b"s" * 50), {}),
-        ("bad-1", "image", b"\x89PNG\r\n\x1a\nnotreally", {}),  # truncated png
-        ("bad-2", "image", b"xx", {}),  # truncated
-        ("bad-3", "image", None, {}),
-        ("unk-1", "video", b"GIF89a-no-decoder-here", {}),  # unknown magic → stub
-    ]
-    return spark.createDataFrame(rows, schema=ASSET_SCHEMA)
-
-
-def test_decode_dimensions_and_fail_open(spark, assets):
-    out = {r["asset_id"]: r for r in decode_media(assets).collect()}
-    assert out["img-1"]["width"] == 640 and out["img-1"]["height"] == 480
-    assert out["img-1"]["payload_bytes"] == 100 and out["img-1"]["ok"]
-    assert out["vid-1"]["n_frames"] == 10
-    assert not out["bad-1"]["ok"] and "png" in out["bad-1"]["error"]
-    assert not out["bad-2"]["ok"] and out["bad-2"]["error"] == "truncated"
-    assert not out["bad-3"]["ok"]
-    # unknown container magic hits the NotImplementedError stub → fail-open
-    assert not out["unk-1"]["ok"] and "no decoder" in out["unk-1"]["error"]
-
-
-def test_real_decoders_ppm_wav_png_bmp_jpeg(spark):
-    import struct as _s
-
-    ppm = encode_ppm(2, 2, bytes([255, 0, 0] * 2 + [0, 0, 255] * 2))
-    wav = encode_wav(2, 44100, b"\x00\x01" * 2 * 300)  # 300 stereo frames
-    png = (
-        b"\x89PNG\r\n\x1a\n" + _s.pack(">I", 13) + b"IHDR"
-        + _s.pack(">IIBBBBB", 320, 200, 8, 2, 0, 0, 0) + b"\x00" * 4
-    )
-    bmp = (
-        b"BM" + _s.pack("<IHHI", 200, 0, 0, 54)
-        + _s.pack("<IiiHH", 40, 77, -55, 1, 24) + b"\x00" * 146
-    )
-    jpeg = (
-        b"\xff\xd8\xff\xe0" + _s.pack(">H", 4) + b"JF"
-        + b"\xff\xc0" + _s.pack(">HBHH", 11, 8, 48, 64) + b"\x00" * 6
-    )
-    rows = [
-        ("ppm-1", "image", ppm, {}),
-        ("wav-1", "audio", wav, {}),
-        ("png-1", "image", png, {}),
-        ("bmp-1", "image", bmp, {}),
-        ("jpg-1", "image", jpeg, {}),
-    ]
-    df = spark.createDataFrame(rows, schema=ASSET_SCHEMA)
-    out = {r["asset_id"]: r for r in decode_media(df).collect()}
-    assert out["ppm-1"]["ok"] and (out["ppm-1"]["width"], out["ppm-1"]["height"]) == (2, 2)
-    assert out["ppm-1"]["payload_bytes"] == 12
-    assert out["wav-1"]["ok"]
-    assert (out["wav-1"]["width"], out["wav-1"]["height"], out["wav-1"]["n_frames"]) == (2, 44100, 300)
-    assert out["png-1"]["ok"] and (out["png-1"]["width"], out["png-1"]["height"]) == (320, 200)
-    assert out["bmp-1"]["ok"] and (out["bmp-1"]["width"], out["bmp-1"]["height"]) == (77, 55)
-    assert out["jpg-1"]["ok"] and (out["jpg-1"]["width"], out["jpg-1"]["height"]) == (64, 48)
 
 
 def test_pixel_stats_real_decode(spark):
     # 3x1: pure red, pure green, mid gray
     ppm = encode_ppm(3, 1, bytes([255, 0, 0, 0, 255, 0, 128, 128, 128]))
     df = spark.createDataFrame(
-        [("px-1", "image", ppm, {}), ("px-2", "image", b"\xff\xd8\xffxx", {})],
+        [
+            ("px-1", "image", ppm, {}),
+            ("px-2", "image", b"\xff\xd8\xffxx", {}),
+            ("bad-1", "image", b"\x89PNG\r\n\x1a\nnotreally", {}),  # truncated png
+            ("bad-2", "image", b"xx", {}),  # truncated
+            ("bad-3", "image", None, {}),
+            ("unk-1", "video", b"GIF89a-no-decoder-here", {}),  # unknown magic
+        ],
         schema=ASSET_SCHEMA,
     )
     out = {r["asset_id"]: r for r in media_pixel_stats(df).collect()}
@@ -92,36 +32,12 @@ def test_pixel_stats_real_decode(spark):
     # luminance: red=76, green=149, gray=128 (fixed-point 601)
     assert (r["min_lum"], r["max_lum"]) == (76, 149)
     assert not out["px-2"]["ok"]  # compressed bitmap: no pixel access
-
-
-def test_decode_fail_closed_raises(spark, assets):
-    import py4j.protocol
-
-    with pytest.raises(Exception):
-        decode_media(assets, fail_open=False).collect()
-
-
-def test_sample_frames(spark, assets):
-    frames = sample_frames(assets, every_nth=3).collect()
-    by_id = {}
-    for r in frames:
-        by_id.setdefault(r["asset_id"], []).append(r)
-    # vid-1: 10 frames sampled every 3rd → 0,3,6,9
-    assert [r["frame_idx"] for r in sorted(by_id["vid-1"], key=lambda r: r["frame_idx"])] == [0, 3, 6, 9]
-    vframes = by_id["vid-1"]
-    assert all(len(bytes(r["frame_bytes"])) == 10 for r in vframes)  # 100B / 10
-    # zero-dimension audio asset still samples by frame count
-    assert len(by_id["aud-1"]) == 2  # frames 0, 3 of 5
-    assert "bad-1" not in by_id
-
-
-def test_media_features_jvm_side(spark, assets):
-    feats = media_features(decode_media(assets))
-    plan = feats._jdf.queryExecution().executedPlan().toString()
-    rows = {r["asset_id"]: r for r in feats.collect()}
-    assert rows["img-1"]["pixels"] == 640 * 480
-    assert abs(rows["vid-1"]["aspect_ratio"] - 1920 / 1080) < 1e-9
-    assert rows["aud-1"]["aspect_ratio"] == 0.0
+    # undecodable assets fail open: one ok=False row each, zeroed stats
+    for aid in ("bad-1", "bad-2", "bad-3", "unk-1"):
+        r = out[aid]
+        assert not r["ok"], aid
+        assert (r["mean_r"], r["mean_g"], r["mean_b"]) == (0.0, 0.0, 0.0)
+        assert (r["min_lum"], r["max_lum"]) == (0, 0)
 
 
 # -- PNG pixel decode: stdlib zlib inflate + spec unfiltering ----------------
@@ -280,8 +196,8 @@ def test_resize_media_fail_open_passthrough(spark):
 
 
 def test_tiff_through_media_pipeline(spark):
-    """TIFF joins the decodable set: decode_media dims/page-count and
-    media_pixel_stats / tiff_page_stats over the real G4 decoder."""
+    """TIFF joins the decodable set: page count, dims and pixel stats
+    through media_pixel_stats / tiff_page_stats over the real G4 decoder."""
     import numpy as np
 
     from marie_icr_spark.operators import tiffio as T
@@ -301,11 +217,6 @@ def test_tiff_through_media_pipeline(spark):
         [("t-1", "image", blob, {}), ("t-2", "image", b"II*\x00" + b"\xff" * 8, {})],
         schema=ASSET_SCHEMA,
     )
-    dec = {r["asset_id"]: r for r in decode_media(df).collect()}
-    assert dec["t-1"]["ok"] and dec["t-1"]["n_frames"] == 2
-    assert (dec["t-1"]["width"], dec["t-1"]["height"]) == (16, 8)
-    assert not dec["t-2"]["ok"] and "tiff" in dec["t-2"]["error"]
-
     # media_pixel_stats uses the FIRST page (loader convention)
     px = {r["asset_id"]: r for r in media_pixel_stats(df).collect()}
     assert px["t-1"]["ok"]
@@ -316,6 +227,11 @@ def test_tiff_through_media_pipeline(spark):
     # per-page fan-out with exact integer sums
     pg = {(r["asset_id"], r["page"]): r
           for r in tiff_page_stats(df).collect()}
+    # one row per page; a bad TIFF is one (page=-1, ok=False) row
+    assert sorted(k for k in pg if k[0] == "t-1") == [("t-1", 0), ("t-1", 1)]
+    assert all(pg[("t-1", k)]["ok"] for k in (0, 1))
+    assert (pg[("t-1", 0)]["width"], pg[("t-1", 0)]["height"]) == (16, 8)
+    assert [k for k in pg if k[0] == "t-2"] == [("t-2", -1)]
     assert pg[("t-1", 0)]["sum_r"] == 255 * (128 - 32)
     assert pg[("t-1", 1)]["sum_g"] == 10 + 20 + 30 + 40 + 50 + 60 + 70 + 80
     assert (pg[("t-1", 1)]["width"], pg[("t-1", 1)]["height"]) == (4, 2)
@@ -323,14 +239,10 @@ def test_tiff_through_media_pipeline(spark):
 
 
 def test_label_components_4_vs_flood_fill():
-    """Union-find run labeling == brute-force flood fill (4-connectivity),
-    plus the reference's char-width contract (box_processor.py:70-127)."""
+    """Union-find run labeling == brute-force flood fill (4-connectivity)."""
     import numpy as np
 
-    from marie_icr_spark.operators.multimodal import (
-        estimate_char_width,
-        label_components_4,
-    )
+    from marie_icr_spark.operators.multimodal import label_components_4
 
     def flood_count(img):
         img = np.asarray(img).astype(bool).copy()
@@ -368,25 +280,17 @@ def test_label_components_4_vs_flood_fill():
     u[2, :] = 1
     assert label_components_4(u) == 1  # U-shape merges late (union-find)
     assert label_components_4(np.zeros((4, 4), np.uint8)) == 0
-    assert estimate_char_width(np.zeros((4, 4), np.uint8), 100) == 8
-    assert estimate_char_width(np.eye(3, dtype=np.uint8), 28) == 9
 
 
 def test_jpeg_fill_bytes_between_segments():
-    """Legal 0xFF fill padding between segments must parse in BOTH walks
-    (dims via decode_media's _decode_jpeg, pixels via decode_jpeg_pixels)
-    so the two ok contracts agree on the same asset."""
-    from marie_icr_spark.operators.multimodal import (
-        _decode_jpeg,
-        decode_jpeg_pixels,
-    )
+    """Legal 0xFF fill padding between segments must parse in the pixel
+    decoder's marker walk and give the unpadded stream's pixels."""
+    from marie_icr_spark.operators.multimodal import decode_jpeg_pixels
     from tests.test_jpeg_decode import _flat_zz, encode_jpeg
 
     blob = encode_jpeg(8, 8, [(1, 1, 1)], [[[_flat_zz(100)]]])
     # inject two fill bytes before the first post-SOI segment marker
     padded = blob[:2] + b"\xff\xff" + blob[2:]
-    dims = _decode_jpeg(padded)
-    assert dims["ok"] and dims["width"] == 8 and dims["height"] == 8
     px = decode_jpeg_pixels(padded)
     assert px is not None and px.shape[:2] == (8, 8)
     # and the unpadded decode agrees
@@ -396,11 +300,9 @@ def test_jpeg_fill_bytes_between_segments():
 def test_ppm_maxval_over_255_fails_open():
     """A 16-bit (maxval 65535) PPM is legal but unsupported: it must emit
     ok=False / None, never garbage 1-byte-read pixels as ok=True."""
-    from marie_icr_spark.operators.multimodal import _decode_ppm, _rgb_image
+    from marie_icr_spark.operators.multimodal import _rgb_image
 
     body = b"P6\n2 1\n65535\n" + bytes(12)  # 2 px * 3 ch * 2 bytes
-    d = _decode_ppm(body)
-    assert d["ok"] is False or d.get("ok") == 0 or not d["ok"]
     assert _rgb_image(body) is None
 
 

@@ -59,9 +59,9 @@ boxes_strategy = st.lists(
     max_size=40,
 )
 
-# 600 boxes in 75 clean 8-word rows (every 50th degenerate): past the
-# 512-word cut-over, so sparse mode takes the numpy band path
-# (boxmath.fast_band_lines), which the 40-box strategy never reaches.
+# 600 boxes in 75 clean 8-word rows (every 50th degenerate): a page past
+# 512 boxes whose usable boxes hit the band fast path
+# (boxmath.fast_band_lines), a size the 40-box strategy never reaches.
 BIG_BAND_PAGE = [
     ((i % 8) * 70, (i // 8) * 22 + (i % 2), 60, -1 if i % 50 == 7 else 16)
     for i in range(600)
@@ -127,24 +127,14 @@ def test_lean_text_path_equals_struct_path_all_modes(boxes):
 
 @settings(max_examples=100, deadline=None)
 @given(boxes_strategy)
-def test_py_band_fast_path_equals_numpy_twin(boxes):
-    """fast_band_lines_py and fast_band_lines must agree on both the
-    None/hit decision and the per-word line numbers."""
-    from marie_icr_spark.extractors.boxmath import (
-        fast_band_lines,
-        fast_band_lines_py,
-    )
+@example(BIG_BAND_PAGE)
+def test_band_fast_path_equals_ladder(boxes):
+    """Whenever fast_band_lines fires on the usable boxes (the ones sparse
+    mode clusters), its line boxes and per-word line numbers equal the
+    general IoU ladder's."""
+    from tests.test_boxmath import _ladder_agrees
 
-    b = [list(x) for x in boxes]
-    py = fast_band_lines_py(b)
-    np_ = fast_band_lines(np.array(b, dtype=np.int64).reshape(-1, 4)) if b else None
-    if py is None or np_ is None:
-        assert py is None and (np_ is None or not b)
-    else:
-        assert py[1] == [int(v) for v in np_[1]]
-        assert [list(map(int, r)) for r in py[0]] == [
-            [int(v) for v in row] for row in np_[0]
-        ]
+    _ladder_agrees([list(x) for x in boxes if x[2] > 0 and x[3] > 0])
 
 
 # -- subword tokenizer contract (extractors/subword.py) ----------------------

@@ -8,7 +8,6 @@ from marie_icr_spark.operators.similarity import (
     ann_batch_topk,
     cosine_topk,
     lsh_bucket,
-    lsh_topk,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -47,13 +46,17 @@ def _planted(spark, n_base=25, copies=4, dim=64, noise=0.05):
 
 
 def test_lsh_topk_recall_on_planted_neighbors(spark):
+    """LSH top-k (``ann_batch_topk``) per single query vector."""
     emb = _planted(spark)
     recalls = []
     for qid in [0, 4, 8, 40, 80]:
         qdf = emb.filter(F.col("vec_id") == qid)
         k = 3  # the other copies of the same base vector
         exact = {r["vec_id"]: r["cosine"] for r in cosine_topk(emb, qdf, k=k).collect()}
-        approx = {r["vec_id"]: r["cosine"] for r in lsh_topk(emb, qdf, k=k).collect()}
+        approx = {
+            r["vec_id"]: r["cosine"]
+            for r in ann_batch_topk(emb, qdf, k=k).collect()
+        }
         hits = set(exact) & set(approx)
         recalls.append(len(hits) / len(exact))
         for h in hits:  # same quantized arithmetic → identical cosines
